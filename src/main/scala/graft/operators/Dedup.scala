@@ -71,23 +71,6 @@ object Dedup {
     sh.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
   }
 
-  /** LSH candidate pairs: band the signature (bands x rowsPerBand = k),
-    * self-join on (band, bandHash).
-    *
-    * The self-join is quadratic in bucket size, so buckets larger than
-    * `maxBucket` take a different path: on real corpora a hot (band, bh)
-    * bucket is a boilerplate clique (identical headers, license blocks),
-    * and enumerating its O(n^2) pairs is both useless and a scale-killer.
-    * Instead each over-cap bucket is emitted as a STAR — every member
-    * paired with the bucket's min doc_id — which is linear in the bucket
-    * and lets transitive closure ([[connectedComponents]]) recover a
-    * genuine clique whose star edges survive the downstream exact-Jaccard
-    * verify (boilerplate cliques do; members NOT actually similar to the
-    * bucket minimum rightly fail verification and rely on their other
-    * bands). Pairs between two non-min members of an over-cap bucket are
-    * found only via another band or the closure — that bounded gap
-    * replaces the unbounded quadratic blowup. Cost: one
-    * map-side-combinable count plus a join per path. */
   /** Persistable LSH band index: one (doc_id, band, bh) row per band.
     * This IS the incremental-dedup state: write it partitioned/bucketed
     * by (band, bh) once per corpus snapshot, and each day's new batch
@@ -103,52 +86,97 @@ object Dedup {
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
   }
 
-  /** Pin a small/sliver-sized intermediate that the downstream DAG
-    * references more than once. Without this, every reference re-plans
-    * the WHOLE upstream lineage as an independent subtree, and AQE's
-    * stage reuse does NOT collapse them: joins inject IsNotNull filters
-    * asymmetrically per consumer, so the duplicated scans canonicalize
-    * differently (measured r14: q65's final executed plan held 34
-    * separate parquet scans of `documents`, one per duplicated shingle
-    * lineage). A lazy localCheckpoint materializes the intermediate once
-    * (first action) and every consumer reads the pinned rows — the same
-    * mechanism [[connectedComponents]] has always used for its per-round
-    * labels. Pinned sets are sliver-sized (band index: docs x bands
-    * rows; candidate pairs; candidate shingles), never the corpus, so
-    * the storage cost is the same O(candidates) the CC edge pin already
-    * pays. Cluster deployments that need executor-loss tolerance swap
-    * this for reliable `checkpoint` exactly as [[connectedComponents]]'s
-    * checkpointDir parameter documents. */
+  /** The one pin for band indexes and candidate slivers: intermediates
+    * the downstream DAG reads more than once. Unpinned, every reference
+    * re-plans the whole upstream lineage as its own subtree, and AQE's
+    * stage reuse does not collapse the copies: joins infer IsNotNull
+    * filters per consumer, so the duplicated scans canonicalize
+    * differently (measured r14: q65's executed plan held 34 separate
+    * scans of `documents`, one per duplicated shingle lineage).
+    *
+    * When a pin runs and what it costs: `localCheckpoint(false)` plans
+    * the child and asks for its RDD at once. Under AQE (on in
+    * [[graft.Session]]) that runs every shuffle and broadcast stage
+    * below the pin as jobs while the DataFrame is still being built,
+    * before any action; with AQE off it runs nothing there. The stage
+    * after the child's last shuffle runs in the first action that reads
+    * the pin, which stores the rows in executor block storage for every
+    * later reader. Pinned sets are sliver-sized (band index: docs x bands
+    * rows; candidate pairs; candidate shingles), never the corpus. The
+    * blocks are executor-local, so losing an executor loses the pin;
+    * [[connectedComponents]]'s `checkpointDir` parameter shows the
+    * reliable `checkpoint` a cluster deployment would swap in. */
   private def pinSliver(df: DataFrame): DataFrame = df.localCheckpoint(false)
 
-  def lshCandidates(sigs: DataFrame, bands: Int = 16, rowsPerBand: Int = 4,
-                    maxBucket: Int = 4096): DataFrame = {
-    // Bucket size + min computed as a WINDOW over (band, bh) inside the
-    // pinned intermediate, not as a separate stats aggregation joined
-    // back: the old shape paid a stats shuffle plus a semi-join per
-    // self-join side plus a star join — three joins whose both sides
-    // descend from a pinned RDD with no size statistics, so none could
-    // broadcast. The window is one shuffle in the pin job, and every
-    // consumer (both self-join sides, the star filter) is a plain
-    // filter over the pinned rows. Skew exposure is unchanged: a hot
-    // (band, bh) bucket landed in one task under the old stats/join
-    // shuffles exactly as it does under the window partition.
-    // Pinned: referenced by both self-join sides and starred —
-    // unpinned, each reference recomputes the FULL signature aggregation
-    val w = Window.partitionBy(col("band"), col("bh"))
-    val sized = pinSliver(bandIndex(sigs, bands, rowsPerBand)
-      .withColumn("bsz", count(lit(1)).over(w))
-      .withColumn("minid", min(col("doc_id")).over(w)))
+  /** The banded-bucket candidate kernel behind [[lshCandidates]],
+    * [[incrementalCandidatesFlagged]], [[simhashPairs]] and
+    * `Similarity.nearDupLsh`. The first three columns of `idx` are
+    * (id, band, bucket), one row per id and band; `payload` names more
+    * `idx` columns to carry; `isNew` is a predicate over `idx`'s columns
+    * that marks the new batch. Returns each distinct pair of ids sharing
+    * a (band, bucket) with at least one new side, as (ida < idb) plus
+    * `<p>_a` and `<p>_b` for every payload column p, taken from the ida
+    * and idb rows. With the default `isNew = lit(true)` that is the full
+    * self-join.
+    *
+    * Buckets of at most `maxBucket` rows are self-joined. The join is
+    * quadratic in bucket size, and on real corpora a hot bucket is a
+    * boilerplate clique (identical headers, license blocks) whose O(n^2)
+    * pairs are useless, so a larger bucket is emitted as a STAR instead:
+    * every member paired with the bucket's min id, kept when the member
+    * or the min is new. That is linear in the bucket, and transitive
+    * closure ([[connectedComponents]]) recovers a genuine clique from
+    * star edges that pass the caller's verify; members not similar to
+    * the bucket min fail it and rely on their other bands. Pairs of two
+    * non-min members of an over-cap bucket are found only through
+    * another band or the closure: a bounded recall gap in place of an
+    * unbounded quadratic blowup.
+    *
+    * Bucket size, min id and the min row's payload and new flag are a
+    * window over (band, bucket) inside the pinned index, so both join
+    * sides and the star rows are filters over one pin: one shuffle in
+    * the pin, instead of a stats aggregation joined back through semi
+    * and star joins, each re-running the index's whole lineage. A hot
+    * bucket lands in one window task, the same skew exposure a stats
+    * shuffle has. */
+  private[graft] def bandedCandidates(idx: DataFrame, maxBucket: Int,
+                                      payload: Seq[String] = Nil,
+                                      isNew: Column = lit(true)): DataFrame = {
+    val Array(id, band, bucket) = idx.columns.take(3)
+    val w = Window.partitionBy(col(band), col(bucket))
+    val sized = pinSliver(idx.select(idx.columns.toSeq.map(col) ++ Seq(
+        count(lit(1)).over(w).as("bsz"),
+        min(col(id)).over(w).as("minid"),
+        min_by(isNew, col(id)).over(w).as("min_new")) ++
+      payload.map(p => min_by(col(p), col(id)).over(w).as(s"min_$p")): _*))
     val bounded = sized.filter(col("bsz") <= maxBucket)
-      .select(col("doc_id"), col("band"), col("bh"))
-    val pairwise = bounded.as("x").join(bounded.as("y"), Seq("band", "bh"))
-      .where(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("ida"), col("y.doc_id").as("idb"))
+      .select((Seq(id, band, bucket) ++ payload).map(col) :+ isNew.as("new"): _*)
+    // x is always new: a new-new pair comes once, as x < y; a new-old
+    // pair comes once in either order and is swapped to ida < idb. With
+    // a literal `isNew` both `new` columns fold away, leaving the plain
+    // x < y self-join.
+    val swap = !col("y.new") && col(s"x.$id") > col(s"y.$id")
+    def sides(c: String, a: String, b: String) = Seq(
+      when(swap, col(s"y.$c")).otherwise(col(s"x.$c")).as(a),
+      when(swap, col(s"x.$c")).otherwise(col(s"y.$c")).as(b))
+    val pairwise = bounded.as("x").join(bounded.as("y"), Seq(band, bucket))
+      .where(col("x.new") && (!col("y.new") || col(s"x.$id") < col(s"y.$id")))
+      .select(sides(id, "ida", "idb") ++
+        payload.flatMap(p => sides(p, s"${p}_a", s"${p}_b")): _*)
     val starred = sized
-      .filter(col("bsz") > maxBucket && col("doc_id") =!= col("minid"))
-      .select(col("minid").as("ida"), col("doc_id").as("idb"))
+      .filter(col("bsz") > maxBucket && col(id) =!= col("minid") &&
+              (isNew || col("min_new")))
+      .select(Seq(col("minid").as("ida"), col(id).as("idb")) ++
+        payload.flatMap(p => Seq(col(s"min_$p").as(s"${p}_a"), col(p).as(s"${p}_b"))): _*)
     pairwise.union(starred).distinct()
   }
+
+  /** LSH candidate pairs: band the signature (bands x rowsPerBand = k)
+    * and pair the docs that share a (band, bh) bucket, over-cap buckets
+    * as stars ([[bandedCandidates]]). */
+  def lshCandidates(sigs: DataFrame, bands: Int = 16, rowsPerBand: Int = 4,
+                    maxBucket: Int = 4096): DataFrame =
+    bandedCandidates(bandIndex(sigs, bands, rowsPerBand), maxBucket)
 
   /** Incremental near-dup candidates: pairs sharing a band bucket where
     * AT LEAST ONE side is in the new batch — old-vs-old pairs were
@@ -156,11 +184,8 @@ object Dedup {
     * never re-enumerated. This is the daily-ingest shape at 100 TB: the
     * corpus-side cost is ONE equi-join of the (tiny) new-batch index
     * against the persisted [[bandIndex]], not a quadratic re-pairing.
-    *
-    * Over-cap buckets take the same star-edge path as [[lshCandidates]]
-    * (every member pairs with the bucket min), kept only when the member
-    * or the bucket min is new — the linear escape hatch for boilerplate
-    * cliques, with closure recovering the clique downstream. */
+    * Over-cap buckets keep a star edge only when the member or the
+    * bucket min is new ([[bandedCandidates]]). */
   def incrementalCandidates(oldIdx: DataFrame, newIdx: DataFrame,
                             maxBucket: Int = 4096): DataFrame =
     incrementalCandidatesFlagged(
@@ -172,31 +197,9 @@ object Dedup {
     * new rows live in the same snapshot table (one aggregation lineage,
     * no union of two separately-shuffled halves). */
   def incrementalCandidatesFlagged(allIdx: DataFrame,
-                                   maxBucket: Int = 4096): DataFrame = {
-    // Same window-over-(band, bh) shape as [[lshCandidates]] (see the
-    // rationale there): bucket size, bucket min and the min NEW member
-    // ride the pinned rows, so the old stats shuffle, both semi-joins
-    // and the star join all collapse into filters over the pin.
-    // Pinned: referenced by both pairwise sides and starred.
-    val w = Window.partitionBy(col("band"), col("bh"))
-    val sized = pinSliver(allIdx
-      .withColumn("bsz", count(lit(1)).over(w))
-      .withColumn("minid", min(col("doc_id")).over(w))
-      .withColumn("min_new_id", min(when(col("is_new"), col("doc_id"))).over(w)))
-    val boundedNew = sized.filter(col("bsz") <= maxBucket && col("is_new"))
-      .select(col("doc_id"), col("band"), col("bh"))
-    val boundedAll = sized.filter(col("bsz") <= maxBucket)
-      .select(col("doc_id"), col("band"), col("bh"))
-    val pairwise = boundedNew.as("x").join(boundedAll.as("y"), Seq("band", "bh"))
-      .where(col("x.doc_id") =!= col("y.doc_id"))
-      .select(least(col("x.doc_id"), col("y.doc_id")).as("ida"),
-              greatest(col("x.doc_id"), col("y.doc_id")).as("idb"))
-    val starred = sized
-      .filter(col("bsz") > maxBucket && col("doc_id") =!= col("minid") &&
-              (col("is_new") || col("minid") === col("min_new_id")))
-      .select(col("minid").as("ida"), col("doc_id").as("idb"))
-    pairwise.union(starred).distinct()
-  }
+                                   maxBucket: Int = 4096): DataFrame =
+    bandedCandidates(allIdx.select(col("doc_id"), col("band"), col("bh"), col("is_new")),
+                     maxBucket, isNew = col("is_new"))
 
   /** Exact Jaccard for given (ida, idb) pairs via shingle-set joins.
     * Only candidate docs' shingles enter the joins (semi-join first,
@@ -295,51 +298,25 @@ object Dedup {
     * bucket join is lossless vs the all-pairs scan (PipelineSpec pins the
     * equivalence at test scale, where no bucket exceeds the cap); an
     * over-cap (band, byte) bucket is emitted as a STAR around its min
-    * doc_id instead of O(n^2) pairs. Star edges pass the SAME hamming
+    * doc_id ([[bandedCandidates]]). Star edges pass the SAME hamming
     * verify as pairwise edges — an over-cap bucket is just an 8-bit
     * collision, so unverified stars would merge dissimilar docs — which
     * means only members within maxHamming of the bucket's min contribute
     * edges from that bucket; a true near-dup pair in an over-cap bucket
     * is lost only if EVERY band it shares (pigeonhole guarantees >= 2)
-    * is over-cap and neither member is near that bucket's min — the
-    * bounded recall gap that replaces the unbounded quadratic blowup.
-    * Plan shape is an equi-join — no cartesian — so it survives
-    * scale-up. */
+    * is over-cap and neither member is near that bucket's min. Plan
+    * shape is an equi-join — no cartesian — so it survives scale-up. */
   def simhashPairs(sig: DataFrame, maxHamming: Int = 6,
                    maxBucket: Int = 4096): DataFrame = {
-    // Bucket size + min as a WINDOW over (band, bv) inside a pinned band
-    // index — the [[lshCandidates]] restructure: the old shape re-ran the
-    // 64-vote signature aggregation once per consumer (stats, both
-    // self-join sides, the star join — four full lineages) and paid a
-    // stats shuffle plus two joins on top. The window is one shuffle in
-    // the pin job; every consumer is a filter over the pinned rows, and
-    // the pin carries the child's size estimate (the sliver-sized band
-    // index), so the planner picks the join strategy from real numbers —
-    // broadcast at bench scale, shuffle at corpus scale.
-    // min(struct(doc_id, simhash)) orders by doc_id first, so `mn` is the
-    // bucket's min member WITH its signature — the star pairs need both.
-    // Skew exposure unchanged.
-    val w = Window.partitionBy(col("band"), col("bv"))
-    val sized = pinSliver(sig.select(col("doc_id"), col("simhash"),
+    val idx = sig.select(col("doc_id"), col("simhash"),
         explode(array((0 until 8).map(b => struct(lit(b).as("band"),
           shiftrightunsigned(col("simhash"), b * 8).bitwiseAND(255).as("bv"))): _*)).as("bb"))
-      .select(col("doc_id"), col("simhash"),
-              col("bb.band").as("band"), col("bb.bv").as("bv"))
-      .withColumn("bsz", count(lit(1)).over(w))
-      .withColumn("mn", min(struct(col("doc_id"), col("simhash"))).over(w)))
-    val banded = sized.filter(col("bsz") <= maxBucket)
-      .select(col("doc_id"), col("simhash"), col("band"), col("bv"))
-    val pairwise = banded.as("a").join(banded.as("b"), Seq("band", "bv"))
-      .where(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
-    val starred = sized
-      .filter(col("bsz") > maxBucket && col("doc_id") =!= col("mn.doc_id"))
-      .select(col("mn.doc_id").as("ida"), col("doc_id").as("idb"),
-        bit_count(col("mn.simhash").bitwiseXOR(col("simhash"))).as("hamming"))
-    pairwise.union(starred)
+      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bv").as("bv"),
+              col("simhash"))
+    bandedCandidates(idx, maxBucket, payload = Seq("simhash"))
+      .select(col("ida"), col("idb"),
+        bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .distinct()
   }
 
   /** SimHash near-dup: banded bucket join, hamming <= 6 (rows-only:
@@ -511,10 +488,10 @@ object Dedup {
       val own = labels.select(col("id"), col("comp"), lit(true).as("old"))
       val viaNeighbors = sym.join(labels, col("dst") === col("id"))
         .select(col("src").as("id"), col("comp"), lit(false).as("old"))
-      // LAZY checkpoint: the convergence count below is the action that
-      // materializes it, so each round is ONE job (propagate + count
-      // changed labels) instead of an eager-checkpoint job plus a
-      // separate convergence-check job.
+      // Not eager: building the pin runs the round's shuffle stages
+      // (see [[pinSliver]]), and the convergence count below runs the
+      // final aggregation and stores the labels, so the round pays no
+      // extra job for an eager checkpoint's own pass over `mid`.
       val mid = pin(own.union(viaNeighbors)
         .groupBy(col("id"))
         .agg(min(col("comp")).as("comp"),
@@ -525,8 +502,9 @@ object Dedup {
         else {
           // pointer jump on the just-materialized labels: comp <- comp's
           // comp. A label is always a vertex id, so the self-join hits;
-          // left+coalesce keeps roots (comp = own id) unchanged. Lazy pin
-          // again — next round's count (or the final action) pays it.
+          // left+coalesce keeps roots (comp = own id) unchanged. Pinned
+          // the same way: the join's shuffle stages run here, the next
+          // round's count (or the final action) runs the rest.
           pin(mid.as("l")
             .join(mid.select(col("id").as("jid"), col("comp").as("jcomp")),
                   col("l.comp") === col("jid"), "left")
@@ -750,9 +728,10 @@ object Dedup {
     // otherwise-identical exchange subtrees canonicalize differently
     // and AQE stage reuse collapses only two of them (the q65 pin
     // finding, solved here without a pin: neither column is ever null —
-    // xxhash64 of a non-null string, scan doc_id — so the filters are
-    // semantically free and every consumer's lineage now matches
-    // bit-for-bit)
+    // the multi-arg xxhash64 never returns null, the size >= k filter
+    // keeps every element_at lookup in bounds, and doc_id is the scan
+    // key — so the filters are semantically free and every consumer's
+    // lineage now matches bit-for-bit)
     val sh = positionalShingles(docs, k)
       .where(col("sh").isNotNull && col("doc_id").isNotNull)
       .repartition(col("sh"))

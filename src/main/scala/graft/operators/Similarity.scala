@@ -243,43 +243,10 @@ object Similarity {
     val bits = transform(planes, p =>
       when(graft.functions.VectorOps.vector_dot(col("embedding"), p) >= 0,
         lit(1)).otherwise(lit(0)))
-    // Pinned (lazy localCheckpoint): rawBanded is consumed by stats, both
-    // self-join sides and the star path — 3+ lineage copies of the
-    // hyperplane-projection scan otherwise, which AQE's stage reuse does
-    // NOT collapse (join-injected IsNotNull filters canonicalize the
-    // copies differently; measured r14, same finding as Dedup.pinSliver).
-    // The pinned set is the band index (corpus x bands id/byte rows, the
-    // same sliver class Dedup.bandIndex pins), NOT the corpus: the
-    // embedding scan itself stays a native columnar FileScan, so the
-    // round-4 "RDD barrier on the gate path" regression (whole-plan
-    // codegen loss) cannot recur — PipelineSpec pins codegen survival.
-    // spread: the fixture embedding table is one row group, so the
-    // hyperplane projection would run on ONE task (§2.5 input skew);
-    // no-op at real scale. Keyed by vec_id so the verify joins below
-    // see deterministic placement.
     // spread: the fixture embedding table is one row group, so the
     // hyperplane projection would run on ONE task (§2.5 input skew);
     // no-op at real scale (Tables.spread).
-    //
-    // Bucket size + min as a WINDOW over (band, bv) INSIDE the pinned
-    // band index — the Dedup.lshCandidates restructure (guide §2.4,
-    // measured on q65): the old shape paid a stats aggregation plus two
-    // broadcast builds (ok buckets, over-cap buckets) plus a semi-join
-    // and a star join over the pin. The window is one shuffle in the pin
-    // job, and every consumer — both self-join sides and the star path —
-    // is a plain filter over the pinned rows. The pin carries the
-    // child's size ESTIMATE (sliver-sized: corpus x bands id/int rows),
-    // so at bench scale the planner broadcast-joins the bounded side
-    // (zero exchanges for pair enumeration — verified in the r15 plan)
-    // and at real scale the same stats degrade the join to a shuffle —
-    // nothing corpus-sized is ever force-broadcast. Skew exposure is
-    // unchanged: a hot (band, bv) bucket landed in one task under the
-    // old stats/join shuffles exactly as under the window partition.
-    // Over-cap buckets still emit a STAR around the bucket's min vec_id
-    // (linear) instead of being dropped: members stay reachable and
-    // transitive closure (Dedup.connectedComponents) recovers the clique.
-    val w = Window.partitionBy(col("band"), col("bv"))
-    val sized = graft.Tables.spread(emb, col("vec_id"))
+    val idx = graft.Tables.spread(emb, col("vec_id"))
       .select(col("vec_id"), bits.as("bits"))
       .select(col("vec_id"), explode(array((0 until bands).map { b =>
         struct(lit(b).as("band"),
@@ -287,23 +254,18 @@ object Similarity {
             element_at(col("bits"), b * bitsPerBand + r + 1) * (1 << r)).reduce(_ + _).as("bv"))
       }: _*)).as("bb"))
       .select(col("vec_id"), col("bb.band").as("band"), col("bb.bv").as("bv"))
-      .withColumn("bsz", count(lit(1)).over(w))
-      .withColumn("minid", min(col("vec_id")).over(w))
-      .localCheckpoint(false)
-    val bounded = sized.filter(col("bsz") <= maxBucket)
-      .select(col("vec_id"), col("band"), col("bv"))
-    val pairwise = bounded.as("a").join(bounded.as("b"), Seq("band", "bv"))
-      .where(col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("ida"), col("b.vec_id").as("idb"))
-    val starred = sized
-      .filter(col("bsz") > maxBucket && col("vec_id") =!= col("minid"))
-      .select(col("minid").as("ida"), col("vec_id").as("idb"))
-    // NOT pinned: the candidate set feeds ONE downstream lineage (the
-    // two verify joins chain off it in a single plan), so a pin would
-    // only pay an extra materialization. The planner cannot broadcast
-    // the candidate side either way (join/distinct output estimates are
-    // far above the threshold), so both verify joins keep it streaming.
-    val candIds = pairwise.union(starred).distinct()
+    // The kernel pins this band index (corpus x bands id/byte rows), NOT
+    // the corpus: the embedding scan itself stays a native columnar
+    // FileScan, so the round-4 "RDD barrier on the gate path" regression
+    // (whole-plan codegen loss) cannot recur — PipelineSpec pins codegen
+    // survival.
+    // The candidate set itself is NOT pinned: it feeds ONE downstream
+    // lineage (the two verify joins chain off it in a single plan), so a
+    // pin would only pay an extra materialization. The planner cannot
+    // broadcast the candidate side either way (join/distinct output
+    // estimates are far above the threshold), so both verify joins keep
+    // it streaming.
+    val candIds = Dedup.bandedCandidates(idx, maxBucket)
     // Per-VECTOR norms computed once on the join sides instead of per
     // PAIR inside cosine(): the verify set is the hot path (the 8-bit
     // band space saturates on dense corpora, so candidates are many),

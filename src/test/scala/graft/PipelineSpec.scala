@@ -246,9 +246,9 @@ class PipelineSpec extends AnyFunSuite {
     // failure, losing whole-stage codegen and AQE on the gate path — the
     // CORPUS INPUT itself became an RDD scan, hiding the parquet source.
     // The lambda-free perturbedTwins must keep the corpus scan in
-    // Catalyst. Round 14 pins nearDupLsh's banded SLIVER via lazy
-    // localCheckpoint (same pattern as Dedup.pinSliver — AQE does not
-    // collapse the duplicated band lineages), which legitimately adds
+    // Catalyst. nearDupLsh's banded SLIVER is pinned by Dedup.pinSliver
+    // (through the shared candidate kernel — AQE does not collapse the
+    // duplicated band lineages), which legitimately adds
     // sliver-sized ExistingRDD scans; the round-4 property is that the
     // EMBEDDING source stays a codegen'd columnar FileScan, asserted
     // directly.
@@ -294,6 +294,58 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(comps.keySet == (0L until 10L).toSet && comps.values.toSet == Set(0L),
       "transitive closure must recover the full clique from the star")
+  }
+
+  test("banded candidate kernel matches a plain-Scala reference: cap, star, new flag, payload") {
+    import spark.implicits._
+    val cap = 3
+    // (band, bucket) -> member ids: below, at and above the cap; the same
+    // bucket value in two bands is two buckets; (6, 9) shows up both as a
+    // star edge and as a pairwise edge, so the result must be distinct
+    val buckets = Seq(
+      (0, 1L) -> Seq(1L, 2L),                    // below cap
+      (0, 2L) -> Seq(3L, 4L, 5L),                // at cap
+      (0, 3L) -> Seq(6L, 7L, 8L, 9L, 10L),       // over cap, new min 6
+      (1, 1L) -> Seq(1L, 6L, 11L, 12L, 13L, 14L), // over cap, old min 1
+      (1, 7L) -> Seq(2L, 3L, 9L),                // at cap
+      (2, 1L) -> Seq(5L),                        // singleton
+      (2, 4L) -> Seq(11L, 12L),                  // below cap, old and new
+      (2, 6L) -> Seq(6L, 9L),                    // below cap, repeats a star edge
+      (2, 5L) -> Seq(20L, 21L, 22L, 23L),        // over cap, old min 20
+      (3, 9L) -> Seq(4L, 7L, 13L, 21L, 22L))     // over cap, old min 4
+    def isNew(id: Long) = id % 3 == 0
+    def pay(id: Long) = s"v$id"
+    val idx = buckets.flatMap { case ((band, bucket), ids) =>
+      ids.map(id => (id, band, bucket, pay(id), isNew(id)))
+    }.toDF("id", "band", "bucket", "pay", "is_new")
+    def reference(incremental: Boolean): Set[(Long, Long, String, String)] =
+      buckets.flatMap { case (_, ids) =>
+        val keep = (a: Long, b: Long) => !incremental || isNew(a) || isNew(b)
+        val edges =
+          if (ids.size <= cap) for (a <- ids; b <- ids if a < b) yield (a, b)
+          else ids.filter(_ != ids.min).map(b => (ids.min, b))
+        edges.filter(keep.tupled)
+      }.map { case (a, b) => (a, b, pay(a), pay(b)) }.toSet
+    def run(df: org.apache.spark.sql.DataFrame) = {
+      assert(df.columns.toSeq == Seq("ida", "idb", "pay_a", "pay_b"))
+      val rows = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3)))
+      assert(rows.length == rows.toSet.size, "kernel output must be distinct")
+      rows.toSet
+    }
+    val full = reference(incremental = false)
+    val inc = reference(incremental = true)
+    // non-vacuous: stars from new and old mins, old-old edges to drop
+    assert(full.contains((6L, 7L, "v6", "v7")) && full.contains((1L, 11L, "v1", "v11")))
+    assert(!inc.contains((1L, 11L, "v1", "v11")) && inc.contains((6L, 7L, "v6", "v7")))
+    assert(full.size == 24 && inc.size == 14, s"reference sizes ${full.size} / ${inc.size}")
+    assert(run(Dedup.bandedCandidates(idx, cap, payload = Seq("pay"))) == full)
+    assert(run(Dedup.bandedCandidates(idx, cap, payload = Seq("pay"),
+      isNew = col("is_new"))) == inc)
+    // no payload: the same pairs, ids only
+    val bare = Dedup.bandedCandidates(idx.select("id", "band", "bucket"), cap)
+    assert(bare.columns.toSeq == Seq("ida", "idb"))
+    assert(bare.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      full.map(e => (e._1, e._2)))
   }
 
   test("connectedComponents labels chains and separate components correctly") {
