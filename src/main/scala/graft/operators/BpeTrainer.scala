@@ -4,9 +4,8 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.{Q, Tables}
+import graft.{Q, Tables, pin}
 
 /** Byte-pair-encoding merge-rule learning (Sennrich et al. 2016,
   * "Neural Machine Translation of Rare Words with Subword Units") — the
@@ -27,9 +26,10 @@ import graft.{Q, Tables}
   *      one place imperative per-row logic is the honest spelling — the
   *      greedy left-to-right merge is sequential by definition).
   *   3. Driver state is ONLY the learned merge list (rounds x few bytes).
-  *      Lineage is cut with persist + periodic localCheckpoint so round k
-  *      does not recompute merges 1..k-1 (the q123 connected-components
-  *      discipline applied to a training loop).
+  *      Every round's vocab is one [[graft.pin]], filled by the next
+  *      round's argmax query, so round k does not recompute merges
+  *      1..k-1 (the q123 connected-components discipline applied to a
+  *      training loop).
   *
   * Reference tie-in: Hive has no tokenizer trainer; this is part of the
   * "operations a large-scale training-data pipeline needs" surface. The
@@ -81,11 +81,10 @@ object BpeTrainer {
   /** Learn up to `rounds` merges with corpus frequency >= minFreq. */
   def train(spark: SparkSession, docs: DataFrame, rounds: Int, minFreq: Long = 2L): Seq[Merge] = {
     import spark.implicits._
-    var vocab: Dataset[(Seq[String], Long)] = wordFreq(docs)
+    // pinned, like every round's vocab, so the corpus pass runs once
+    var vocab: Dataset[(Seq[String], Long)] = pin(wordFreq(docs)
       .as[(String, Long)]
-      .map { case (w, f) => (symbols(w) :+ EndOfWord, f) }
-    vocab = vocab.persist(StorageLevel.MEMORY_AND_DISK)
-    vocab.count() // materialize round 0 so the corpus pass runs exactly once
+      .map { case (w, f) => (symbols(w) :+ EndOfWord, f) })
 
     val merges = ArrayBuffer[Merge]()
     var round = 0
@@ -104,18 +103,11 @@ object BpeTrainer {
       else {
         val (l, r, cnt) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         merges += Merge(merges.length + 1, l, r, cnt)
-        val prev = vocab
-        vocab = vocab.map { case (syms, f) =>
-            (applyMerge(syms.toIndexedSeq, l, r): Seq[String], f) }
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // cut lineage every few rounds; otherwise round k replays all maps
-        if ((round + 1) % 8 == 0) vocab = vocab.localCheckpoint(true)
-        vocab.count()
-        prev.unpersist(false)
+        vocab = pin(vocab.map { case (syms, f) =>
+          (applyMerge(syms.toIndexedSeq, l, r): Seq[String], f) })
         round += 1
       }
     }
-    vocab.unpersist(false)
     merges.toSeq
   }
 

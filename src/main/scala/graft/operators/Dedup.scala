@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Q, Tables, pin}
 
 /** Deduplication suite for training-data pipelines over `documents`:
   * exact (hash-groupBy), MinHash+LSH near-dup (shingle -> k-hash
@@ -86,28 +86,6 @@ object Dedup {
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
   }
 
-  /** The one pin for band indexes and candidate slivers: intermediates
-    * the downstream DAG reads more than once. Unpinned, every reference
-    * re-plans the whole upstream lineage as its own subtree, and AQE's
-    * stage reuse does not collapse the copies: joins infer IsNotNull
-    * filters per consumer, so the duplicated scans canonicalize
-    * differently (measured r14: q65's executed plan held 34 separate
-    * scans of `documents`, one per duplicated shingle lineage).
-    *
-    * When a pin runs and what it costs: `localCheckpoint(false)` plans
-    * the child and asks for its RDD at once. Under AQE (on in
-    * [[graft.Session]]) that runs every shuffle and broadcast stage
-    * below the pin as jobs while the DataFrame is still being built,
-    * before any action; with AQE off it runs nothing there. The stage
-    * after the child's last shuffle runs in the first action that reads
-    * the pin, which stores the rows in executor block storage for every
-    * later reader. Pinned sets are sliver-sized (band index: docs x bands
-    * rows; candidate pairs; candidate shingles), never the corpus. The
-    * blocks are executor-local, so losing an executor loses the pin;
-    * [[connectedComponents]]'s `checkpointDir` parameter shows the
-    * reliable `checkpoint` a cluster deployment would swap in. */
-  private def pinSliver(df: DataFrame): DataFrame = df.localCheckpoint(false)
-
   /** The banded-bucket candidate kernel behind [[lshCandidates]],
     * [[incrementalCandidatesFlagged]], [[simhashPairs]] and
     * `Similarity.nearDupLsh`. The first three columns of `idx` are
@@ -144,7 +122,7 @@ object Dedup {
                                       isNew: Column = lit(true)): DataFrame = {
     val Array(id, band, bucket) = idx.columns.take(3)
     val w = Window.partitionBy(col(band), col(bucket))
-    val sized = pinSliver(idx.select(idx.columns.toSeq.map(col) ++ Seq(
+    val sized = pin(idx.select(idx.columns.toSeq.map(col) ++ Seq(
         count(lit(1)).over(w).as("bsz"),
         min(col(id)).over(w).as("minid"),
         min_by(isNew, col(id)).over(w).as("min_new")) ++
@@ -217,10 +195,10 @@ object Dedup {
     // outer join) — unpinned, each consumer re-runs the whole candidate
     // pipeline; `sh` is consumed by sizes/sa/sb — unpinned, each re-runs
     // the corpus shingle explode. Both are candidate-sliver-sized.
-    val pairs = pinSliver(pairsIn)
+    val pairs = pin(pairsIn)
     val candDocs = pairs
       .select(explode(array(col("ida"), col("idb"))).as("doc_id")).distinct()
-    val sh = pinSliver(
+    val sh = pin(
       shAll.join(broadcast(candDocs), Seq("doc_id"), "left_semi").distinct())
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
     val inter = pairs
@@ -437,47 +415,24 @@ object Dedup {
     * 100 TB each round is an equi-join + min-aggregation + label
     * self-join on the (small) vertex set, not the corpus.
     *
-    * Fault tolerance: rounds pin their output so the plan stays O(1)
-    * deep instead of growing with the iteration count. By default that
-    * pin is `localCheckpoint` — executor-local, right for local mode and
-    * short jobs but NOT fault-tolerant (losing an executor mid-loop
-    * kills the query). Cluster deployments pass `checkpointDir`
-    * (HDFS/object-store path) to switch every pin to a reliable
-    * `checkpoint`, which survives executor loss at the cost of a
-    * distributed-FS write per round — the vertex set is a sliver of the
-    * corpus, so that write is small.
+    * Each round is a [[graft.pin]], so the plan stays O(1) deep and the
+    * loop survives executor loss wherever Spark has a checkpoint dir.
     *
     * Returns (id, comp) for every vertex incident to an edge. */
-  def connectedComponents(edges: DataFrame, maxIters: Int = 30,
-                          checkpointDir: Option[String] = None): DataFrame = {
-    val sc = edges.sparkSession.sparkContext
-    checkpointDir.foreach { dir =>
-      // setCheckpointDir stores a fully-qualified '<dir>/<uuid>' subdir,
-      // so compare against the qualified prefix — a raw contains(dir)
-      // never matches and would repoint (and orphan) a fresh UUID dir on
-      // every call
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val qualified = p.getFileSystem(sc.hadoopConfiguration)
-        .makeQualified(p).toString
-      if (!sc.getCheckpointDir.exists(_.startsWith(qualified)))
-        sc.setCheckpointDir(dir)
-    }
-    def pin(df: DataFrame, eager: Boolean): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager)
-      else df.localCheckpoint(eager)
+  def connectedComponents(edges: DataFrame, maxIters: Int = 30): DataFrame = {
     // materialize the symmetric edge list ONCE: the edge lineage is the
     // whole candidate+verify pipeline, and every propagation round (plus
     // its convergence check) would otherwise recompute it from the scan
     val sym = pin(edges
       .select(col("ida").as("src"), col("idb").as("dst"))
-      .union(edges.select(col("idb").as("src"), col("ida").as("dst"))), eager = true)
+      .union(edges.select(col("idb").as("src"), col("ida").as("dst"))))
     // Initialization fused with the first propagation round: label(v) =
     // min(v, min over neighbors) rather than v — one groupBy does the
     // work of the identity init PLUS round one, so star/pair components
     // (the bulk of near-dup clusters) converge a full round earlier.
     var labels = pin(sym.groupBy(col("src"))
       .agg(min(col("dst")).as("mn"))
-      .select(col("src").as("id"), least(col("src"), col("mn")).as("comp")), eager = true)
+      .select(col("src").as("id"), least(col("src"), col("mn")).as("comp")))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
@@ -488,28 +443,25 @@ object Dedup {
       val own = labels.select(col("id"), col("comp"), lit(true).as("old"))
       val viaNeighbors = sym.join(labels, col("dst") === col("id"))
         .select(col("src").as("id"), col("comp"), lit(false).as("old"))
-      // Not eager: building the pin runs the round's shuffle stages
-      // (see [[pinSliver]]), and the convergence count below runs the
-      // final aggregation and stores the labels, so the round pays no
-      // extra job for an eager checkpoint's own pass over `mid`.
+      // building the pin runs the round's shuffle stages; without a
+      // checkpoint dir the convergence count below runs the final
+      // aggregation and stores the labels (see [[graft.pin]])
       val mid = pin(own.union(viaNeighbors)
         .groupBy(col("id"))
         .agg(min(col("comp")).as("comp"),
-             min(when(col("old"), col("comp"))).as("oldcomp")), eager = false)
+             min(when(col("old"), col("comp"))).as("oldcomp")))
       converged = mid.where(col("comp") < col("oldcomp")).count() == 0L
       labels =
         if (converged) mid.select(col("id"), col("comp"))
         else {
           // pointer jump on the just-materialized labels: comp <- comp's
           // comp. A label is always a vertex id, so the self-join hits;
-          // left+coalesce keeps roots (comp = own id) unchanged. Pinned
-          // the same way: the join's shuffle stages run here, the next
-          // round's count (or the final action) runs the rest.
+          // left+coalesce keeps roots (comp = own id) unchanged
           pin(mid.as("l")
             .join(mid.select(col("id").as("jid"), col("comp").as("jcomp")),
                   col("l.comp") === col("jid"), "left")
             .select(col("l.id").as("id"),
-                    coalesce(col("jcomp"), col("l.comp")).as("comp")), eager = false)
+                    coalesce(col("jcomp"), col("l.comp")).as("comp")))
         }
       iter += 1
     }
@@ -615,6 +567,63 @@ object Dedup {
              .otherwise(0L)).as("n_canonical"))
   }
 
+  /** (doc_id, pos, sh): every k-token shingle of every document with its
+    * 1-based start offset, keyed by a 64-bit shingle hash — an 8-byte
+    * join/shuffle key instead of a ~10k-char-wide string (the difference
+    * between shuffling the corpus once and shuffling it several times
+    * over at 100 TB). `sh` is used ONLY for equality (df stats, the
+    * anti-join, the self-join): no downstream result reads its value, so
+    * the key is the chained multi-arg `xxhash64(tok_i, …, tok_{i+k-1})`
+    * over the k tokens in place — equal tuples collide by construction
+    * (split on " +" yields space-free tokens, so this has exactly the
+    * equality classes of hashing the joined string) and the offsets are
+    * exploded directly, with no per-shingle slice array or joined
+    * string. The hash runs after the explode, where whole-stage codegen
+    * fuses it, not inside a higher-order function.
+    * A 64-bit collision can only fabricate an isolated 1-shingle island
+    * (run = k < minRun) unless k*2^-64-probability events chain — and
+    * the DuckDB oracle, which matches shingle STRINGS, would flag any
+    * pair it ever invented. The single source of truth for the span
+    * family — [[sharedSpans]] and [[spanContamination]] must shingle
+    * identically or their runs silently diverge. */
+  private def positionalShingles(docs: DataFrame, k: Int): DataFrame =
+    // spread: same single-row-group rationale as shingleHashes — the
+    // positional shingle build is the span family's dominant per-row
+    // cost and must not run on one task. No-op at real scale.
+    Tables.spread(docs, col("doc_id"))
+      .select(col("doc_id"), split(trim(col("text")), " +").as("toks"))
+      .filter(size(col("toks")) >= k)
+      .select(col("doc_id"), col("toks"),
+        explode(sequence(lit(1), size(col("toks")) - (k - 1))).as("pos"))
+      .select(col("doc_id"), col("pos"),
+        xxhash64((0 until k).map(j =>
+          element_at(col("toks"), col("pos") + j)): _*).as("sh"))
+
+  /** Qualifying island intervals: one row per maximal run of consecutive
+    * `pa` per (left, right, diag) with run >= minRun, carrying the
+    * covered position interval [st, en] on the LEFT document's axis
+    * (within an island pa is consecutive by construction, so
+    * en = st + run - 1 exactly). */
+  private def islandSpans(matches: DataFrame, left: String, right: String,
+                          k: Int, minRun: Int): DataFrame = {
+    val w = Window.partitionBy(col(left), col(right), col("diag")).orderBy(col("pa"))
+    matches
+      .withColumn("island", col("pa") - row_number().over(w))
+      .groupBy(col(left), col(right), col("diag"), col("island"))
+      .agg(min(col("pa")).as("st"), (count(lit(1)) + (k - 1)).as("run"))
+      .filter(col("run") >= minRun)
+      .withColumn("en", col("st") + col("run") - 1)
+  }
+
+  /** Maximal islands of consecutive `pa` per (left, right, diag), then
+    * per-pair max-run/span-count — the shared tail of the span family. */
+  private def diagonalRuns(matches: DataFrame, left: String, right: String,
+                           k: Int, minRun: Int): DataFrame =
+    islandSpans(matches, left, right, k, minRun)
+      .groupBy(col(left), col(right))
+      .agg(max(col("run")).as("max_run"), count(lit(1)).as("n_spans"))
+      .orderBy(col(left), col(right))
+
   /** ExactSubstr-style shared-token-span detection (the exact-substring
     * half of Lee et al. 2022, "Deduplicating Training Data Makes Language
     * Models Better"; no reference counterpart — pipeline extension).
@@ -642,68 +651,6 @@ object Dedup {
     * (ida, idb, diag) whose partitions are bounded by the longest shared
     * span. Both scale-shaped; nothing is ever collected.
     */
-  /** (doc_id, pos, sh): every k-token shingle of every document with its
-    * 1-based start offset, keyed by a 64-bit shingle hash — an 8-byte
-    * join/shuffle key instead of a ~10k-char-wide string (the difference
-    * between shuffling the corpus once and shuffling it several times
-    * over at 100 TB). `sh` is used ONLY for equality (df stats, the
-    * anti-join, the self-join): no downstream result reads its value, so
-    * the key is the chained multi-arg `xxhash64(tok_i, …, tok_{i+k-1})`
-    * over the k tokens in place — equal tuples collide by construction
-    * (split on " +" yields space-free tokens, so this has exactly the
-    * equality classes of hashing the joined string) and the offsets are
-    * exploded directly, skipping the per-shingle slice-array +
-    * concat_ws-string allocation the old shape paid inside the HOF
-    * (measured r15: single-query probe steady q216 1.39 → 0.76 s, q215
-    * 1.80 → 1.65 s; in the warm bench session every pass flat-or-faster,
-    * cold pass −0.2/−0.4 s — the win is allocation-bound, so it grows
-    * with corpus bytes. The hash itself stays post-explode where
-    * whole-stage codegen fuses it; the r13 in-HOF hash variant was the
-    * slow one).
-    * A 64-bit collision can only fabricate an isolated 1-shingle island
-    * (run = k < minRun) unless k*2^-64-probability events chain — and
-    * the DuckDB oracle, which matches shingle STRINGS, would flag any
-    * pair it ever invented. The single source of truth for the span
-    * family — [[sharedSpans]] and [[spanContamination]] must shingle
-    * identically or their runs silently diverge. */
-  private def positionalShingles(docs: DataFrame, k: Int): DataFrame =
-    // spread: same single-row-group rationale as shingleHashes — the
-    // positional shingle build is the span family's dominant per-row
-    // cost and must not run on one task. No-op at real scale.
-    Tables.spread(docs, col("doc_id"))
-      .select(col("doc_id"), split(trim(col("text")), " +").as("toks"))
-      .filter(size(col("toks")) >= k)
-      .select(col("doc_id"), col("toks"),
-        explode(sequence(lit(1), size(col("toks")) - (k - 1))).as("pos"))
-      .select(col("doc_id"), col("pos"),
-        xxhash64((0 until k).map(j =>
-          element_at(col("toks"), col("pos") + j)): _*).as("sh"))
-
-  /** Maximal islands of consecutive `pa` per (left, right, diag), then
-    * per-pair max-run/span-count — the shared tail of the span family. */
-  /** Qualifying island intervals: one row per maximal run of consecutive
-    * `pa` per (left, right, diag) with run >= minRun, carrying the
-    * covered position interval [st, en] on the LEFT document's axis
-    * (within an island pa is consecutive by construction, so
-    * en = st + run - 1 exactly). */
-  private def islandSpans(matches: DataFrame, left: String, right: String,
-                          k: Int, minRun: Int): DataFrame = {
-    val w = Window.partitionBy(col(left), col(right), col("diag")).orderBy(col("pa"))
-    matches
-      .withColumn("island", col("pa") - row_number().over(w))
-      .groupBy(col(left), col(right), col("diag"), col("island"))
-      .agg(min(col("pa")).as("st"), (count(lit(1)) + (k - 1)).as("run"))
-      .filter(col("run") >= minRun)
-      .withColumn("en", col("st") + col("run") - 1)
-  }
-
-  private def diagonalRuns(matches: DataFrame, left: String, right: String,
-                           k: Int, minRun: Int): DataFrame =
-    islandSpans(matches, left, right, k, minRun)
-      .groupBy(col(left), col(right))
-      .agg(max(col("run")).as("max_run"), count(lit(1)).as("n_spans"))
-      .orderBy(col(left), col(right))
-
   def sharedSpans(docs: DataFrame, k: Int = 8, minRun: Int = 20,
                   dfCap: Int = 64): DataFrame = {
     require(k >= 2, s"shingle width k=$k must be >= 2")
@@ -747,19 +694,6 @@ object Dedup {
     diagonalRuns(matches, "ida", "idb", k, minRun)
   }
 
-  /** Span-level decontamination: which TRAIN documents contain a
-    * >= minRun-token verbatim span from any EVAL document. The n-gram
-    * overlap report ([[graft.operators.PipelineOps]] decontaminate /
-    * q148) flags shared vocabulary; this flags verbatim leakage — the
-    * thing that actually invalidates a benchmark number (Lee et al.
-    * 2022 find eval answers embedded verbatim in train text).
-    *
-    * Scale shape: eval is the curated, small side — its positional
-    * shingle index is BROADCAST; the train corpus is scanned once and
-    * never reshuffled for matching. Only the matched sliver (train
-    * shingles that literally occur in eval) reaches the island window.
-    * No df cap: eval is deduplicated by construction, and a hot eval
-    * shingle is bounded by eval's own size, not the corpus's. */
   /** Shared by [[spanContamination]]/[[spanCoverage]]: train shingles
     * that literally occur in eval, with `pa` on the TRAIN position axis. */
   private def contaminationMatches(train: DataFrame, evalDocs: DataFrame,
@@ -775,26 +709,24 @@ object Dedup {
               col("pos").as("pa"), (col("pos") - col("ep")).as("diag"))
   }
 
+  /** Span-level decontamination: which TRAIN documents contain a
+    * >= minRun-token verbatim span from any EVAL document. The n-gram
+    * overlap report ([[graft.operators.PipelineOps]] decontaminate /
+    * q148) flags shared vocabulary; this flags verbatim leakage — the
+    * thing that actually invalidates a benchmark number (Lee et al.
+    * 2022 find eval answers embedded verbatim in train text).
+    *
+    * Scale shape: eval is the curated, small side — its positional
+    * shingle index is BROADCAST; the train corpus is scanned once and
+    * never reshuffled for matching. Only the matched sliver (train
+    * shingles that literally occur in eval) reaches the island window.
+    * No df cap: eval is deduplicated by construction, and a hot eval
+    * shingle is bounded by eval's own size, not the corpus's. */
   def spanContamination(train: DataFrame, evalDocs: DataFrame,
                         k: Int = 8, minRun: Int = 20): DataFrame =
     diagonalRuns(contaminationMatches(train, evalDocs, k, minRun),
                  "eval_id", "train_id", k, minRun)
 
-  /** Per-train-document leak coverage — the decision metric
-    * decontamination feeds: what FRACTION of a train doc's tokens sits
-    * inside a >= minRun verbatim eval span (Lee et al. 2022 drop whole
-    * documents past a coverage threshold; reporting per-pair max runs
-    * alone can't distinguish one 20-token quote from a half-copied
-    * page). Qualifying spans from ALL eval docs and diagonals are
-    * merged as intervals on the train doc's token axis (classic sweep:
-    * running-max of interval ends, new region when a span starts past
-    * it), so overlapping leaks never double-count a token.
-    * `leak_frac` is a single IEEE division of two exact integers —
-    * bit-stable across engines.
-    *
-    * Scale shape: everything after the broadcast shingle probe operates
-    * on the matched sliver; the merge windows partition by train_id —
-    * bounded by one document's span count, never the corpus. */
   /** Merged (non-overlapping, maximal) leaked-token regions per train
     * doc: (train_id, lo, hi) on the train token axis, from qualifying
     * spans across ALL eval docs and diagonals (running-max sweep). The
@@ -817,6 +749,21 @@ object Dedup {
       .drop("grp")
   }
 
+  /** Per-train-document leak coverage — the decision metric
+    * decontamination feeds: what FRACTION of a train doc's tokens sits
+    * inside a >= minRun verbatim eval span (Lee et al. 2022 drop whole
+    * documents past a coverage threshold; reporting per-pair max runs
+    * alone can't distinguish one 20-token quote from a half-copied
+    * page). Qualifying spans from ALL eval docs and diagonals are
+    * merged as intervals on the train doc's token axis (classic sweep:
+    * running-max of interval ends, new region when a span starts past
+    * it), so overlapping leaks never double-count a token.
+    * `leak_frac` is a single IEEE division of two exact integers —
+    * bit-stable across engines.
+    *
+    * Scale shape: everything after the broadcast shingle probe operates
+    * on the matched sliver; the merge windows partition by train_id —
+    * bounded by one document's span count, never the corpus. */
   def spanCoverage(train: DataFrame, evalDocs: DataFrame,
                    k: Int = 8, minRun: Int = 20): DataFrame = {
     val ntok = train.select(col("doc_id").as("train_id"),
@@ -1067,8 +1014,6 @@ object Dedup {
     "q201_incremental_dedup" -> q201_incremental_dedup,
   )
 
-  /** Shingle-set + threshold-filtered all-pairs CTEs shared by the
-    * jaccard and connected-component oracles. */
   /** Shared eval/train span-oracle SQL (q216/q225/q229): tokenize ->
     * positional 8-shingles -> cross eval/train shingle matches on the
     * %5 split -> per-diagonal islands. MUST shingle identically to the
@@ -1113,6 +1058,8 @@ object Dedup {
         |merged AS (SELECT train_id, g, min(st) AS lo, max(en) AS hi
         |           FROM grp GROUP BY train_id, g)""".stripMargin
 
+  /** Shingle-set + threshold-filtered all-pairs CTEs shared by the
+    * jaccard and connected-component oracles. */
   private def shPairsCtes(threshold: Double, docCap: Long = Long.MaxValue): String =
     s"""sh AS (
        |  SELECT doc_id, list_distinct([s[i] || ' ' || s[i+1] || ' ' || s[i+2]

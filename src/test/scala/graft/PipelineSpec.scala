@@ -246,7 +246,7 @@ class PipelineSpec extends AnyFunSuite {
     // failure, losing whole-stage codegen and AQE on the gate path — the
     // CORPUS INPUT itself became an RDD scan, hiding the parquet source.
     // The lambda-free perturbedTwins must keep the corpus scan in
-    // Catalyst. nearDupLsh's banded SLIVER is pinned by Dedup.pinSliver
+    // Catalyst. nearDupLsh's banded SLIVER is pinned by graft.pin
     // (through the shared candidate kernel — AQE does not collapse the
     // duplicated band lineages), which legitimately adds
     // sliver-sized ExistingRDD scans; the round-4 property is that the
@@ -373,15 +373,18 @@ class PipelineSpec extends AnyFunSuite {
 
   test("reliable checkpoint mode produces the same labels and writes the dir") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
     val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("ida", "idb")
-    val comps = Dedup.connectedComponents(edges, checkpointDir = Some(dir))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L), comps.toString)
-    // the reliable path must actually have checkpointed to the dir
-    def anyFile(f: java.io.File): Boolean =
-      f.isFile || Option(f.listFiles).exists(_.exists(anyFile))
-    assert(anyFile(new java.io.File(dir)), s"no checkpoint files under $dir")
+    // the context's dir switches every pin to reliable mode; the shim
+    // clears it afterwards so later specs on the shared context stay local
+    org.apache.spark.CheckpointDirShim.withCheckpointDir(spark.sparkContext) { dir =>
+      val comps = Dedup.connectedComponents(edges)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L), comps.toString)
+      // the reliable path must actually have checkpointed to the dir
+      def anyFile(f: java.io.File): Boolean =
+        f.isFile || Option(f.listFiles).exists(_.exists(anyFile))
+      assert(anyFile(new java.io.File(dir)), s"no checkpoint files under $dir")
+    }
   }
 
   test("group split is leakage-safe, deterministic, and near the target fractions") {
