@@ -9,6 +9,11 @@ import org.apache.spark.sql.SparkSession
   * Spark defaults. AQE on so skew joins / partition coalescing mirror the
   * reference's SkewJoinResolver / SetReducerParallelism
   * (ql/src/java/org/apache/hadoop/hive/ql/optimizer/physical/) for free.
+  *
+  * Every session in the engine, its tests, `Bench`, `Verify`, the tools
+  * and perfbench's harness is built through `configure`, so the static
+  * confs it sets (the codegen cache size) hold for the whole JVM as long
+  * as the JVM's first session comes from here.
   */
 object Session {
 
@@ -27,6 +32,13 @@ object Session {
     // events.parquet carries TIMESTAMP(NANOS) which Spark refuses by
     // default; read as long and convert in Tables.events.
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // Spark caches 100 generated classes by default, fewer than one pass
+    // generates (47-query headline pass at sf0.1: 782 classes, 788 over
+    // three passes; the whole 291-query contract, each query once: 3238),
+    // and a class that falls out is compiled again (Janino, then JIT) on
+    // the next pass. Static: it counts only if set before the JVM's first
+    // codegen.
+    .config("spark.sql.codegen.cache.maxEntries", "2000")
 
   /** Hive-metastore-backed session: catalog state (databases, tables,
     * views, partitions) persists in a derby-backed metastore under
