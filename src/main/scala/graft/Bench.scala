@@ -95,10 +95,6 @@ object Bench {
   def unresolvedHeadline: Seq[String] =
     headline.filterNot(SparkEntry.queries.contains)
 
-  /** Aggregate timed passes into the artifact JSON. Pure so BenchSpec can
-    * inject a failure and pin that (a) a failed query never appears in the
-    * headline timing map, and (b) it IS listed under "failed" — round 5
-    * shipped exception latencies as query times, which this forbids. */
   /** 1-minute load average from /proc/loadavg (NaN if unreadable — e.g.
     * non-Linux). Sampled before and after the timed passes so a gate
     * reader can apply BASELINE.md's host-variance calibration without a
@@ -109,6 +105,10 @@ object Bench {
     try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
     catch { case _: Throwable => Double.NaN }
 
+  /** Aggregate timed passes into the artifact JSON. Pure so BenchSpec can
+    * inject a failure and pin that (a) a failed query never appears in the
+    * headline timing map, and (b) it IS listed under "failed" — round 5
+    * shipped exception latencies as query times, which this forbids. */
   def render(cold: Seq[(String, Double)], steady1: Seq[(String, Double)],
              steady2: Seq[(String, Double)], failed: Seq[String],
              sfDir: String, loadStart: Double = Double.NaN,
@@ -151,15 +151,12 @@ object Bench {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
 
-    // Two passes, BOTH timed. Pass 1 is cold (JVM JIT, per-query codegen
+    // Three passes, ALL timed. Pass 1 is cold (JVM JIT, per-query codegen
     // compilation, parquet footer/file-listing caches all cold) — the
-    // first-run regime. Pass 2 is steady state — the regime a long-lived
-    // 100 TB cluster session actually runs in, and the only regime where
-    // run-to-run numbers are comparable across machines under load
-    // (round-1's 12x gate-vs-local q65 gap was cold-start +
-    // block-manager noise, not query cost). The headline metric stays
-    // steady-state; the cold numbers ride along so the ledger never
-    // needs a methodology footnote.
+    // first-run regime. Passes 2 and 3 are steady state — the regime a
+    // long-lived cluster session actually runs in. The headline is each
+    // query's min across all three, cold included (see the object doc);
+    // every pass's map rides along in the artifact.
     if (unresolvedHeadline.nonEmpty) {
       System.err.println(s"[bench] headline names missing from SparkEntry.queries: " +
         unresolvedHeadline.mkString(", "))

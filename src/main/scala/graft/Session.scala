@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Every session in the engine, its tests, `Bench`, `Verify`, the tools
   * and perfbench's harness is built through `configure`, so the static
-  * confs it sets (the codegen cache size) hold for the whole JVM as long
-  * as the JVM's first session comes from here.
+  * confs it sets (the codegen cache size, checkpoint cleaning) hold for
+  * the whole JVM as long as the JVM's first session comes from here.
   */
 object Session {
 
@@ -39,6 +39,10 @@ object Session {
     // the next pass. Static: it counts only if set before the JVM's first
     // codegen.
     .config("spark.sql.codegen.cache.maxEntries", "2000")
+    // with a checkpoint dir set every graft.pin writes files (one dir per
+    // CC or BPE round); Spark deletes them only with this on, once the
+    // pinned RDD is garbage collected. Read when the context is created.
+    .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
 
   /** Hive-metastore-backed session: catalog state (databases, tables,
     * views, partitions) persists in a derby-backed metastore under

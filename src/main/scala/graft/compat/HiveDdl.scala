@@ -1,5 +1,7 @@
 package graft.compat
 
+import graft.SqlText
+
 /** HiveQL CREATE TABLE → Spark datasource DDL (the reference's
   * SemanticAnalyzer DDL surface, ql/src/java/org/apache/hadoop/hive/ql/
   * parse/HiveParser.g createTableStatement): what a user migrating off
@@ -53,7 +55,7 @@ object HiveDdl {
         if (asIdx >= 0) (rest.substring(0, asIdx), Some(rest.substring(asIdx + 2).trim))
         else (rest, None)
       val cols = if (head.startsWith("(")) {
-        val close = matchParen(head, 0)
+        val close = SqlText.matchParen(head, 0)
         require(close > 0, s"unbalanced column list in: $stmt")
         Some(head.substring(1, close))
       } else None
@@ -292,7 +294,7 @@ object HiveDdl {
   /** WITH SERDEPROPERTIES ('k'='v', ...) as a map. */
   private[compat] def serdeProps(tail: String): Map[String, String] =
     "(?is)with\\s+serdeproperties\\s*\\(".r.findFirstMatchIn(tail).map { m =>
-      val close = matchParen(tail, m.end - 1)
+      val close = SqlText.matchParen(tail, m.end - 1)
       require(close > 0, "unbalanced SERDEPROPERTIES")
       locally {
         val body = tail.substring(m.end, close)
@@ -310,7 +312,7 @@ object HiveDdl {
   /** TBLPROPERTIES ('k'='v', ...) as a map. */
   private[compat] def tblProps(tail: String): Map[String, String] =
     "(?is)tblproperties\\s*\\(".r.findFirstMatchIn(tail).map { m =>
-      val close = matchParen(tail, m.end - 1)
+      val close = SqlText.matchParen(tail, m.end - 1)
       require(close > 0, "unbalanced TBLPROPERTIES")
       locally {
         val body = tail.substring(m.end, close)
@@ -410,9 +412,9 @@ object HiveDdl {
   private def partitionedBy(tail: String): Seq[(String, String)] =
     "(?is)partitioned\\s+by\\s*\\(".r.findFirstMatchIn(tail).map { m =>
       val open = m.end - 1
-      val close = matchParen(tail, open)
+      val close = SqlText.matchParen(tail, open)
       require(close > 0, "unbalanced PARTITIONED BY")
-      splitTop(tail.substring(open + 1, close)).map { c =>
+      SqlText.split(tail.substring(open + 1, close), angle = true).map { c =>
         // the TYPE may carry parens/commas (decimal(8,4)) — take the
         // name, then everything up to an optional COMMENT as the type
         val t = c.trim
@@ -433,22 +435,6 @@ object HiveDdl {
         "(?is)sorted\\s+by\\s*\\([^)]*\\)".r.replaceFirstIn(c, "")
       else c
     }
-
-  /** Split on commas at paren AND angle-bracket depth 0 (types like
-    * decimal(8,4), map<string,string>, struct<a:int,b:string>). */
-  private def splitTop(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    s.foreach {
-      case c @ ('(' | '<') => depth += 1; cur.append(c)
-      case c @ (')' | '>') => depth -= 1; cur.append(c)
-      case ',' if depth == 0 => out += cur.toString; cur.clear()
-      case ch => cur.append(ch)
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.result()
-  }
 
   private def locationOf(tail: String): Option[String] =
     "(?is)location\\s+'([^']*)'".r.findFirstMatchIn(tail).map(_.group(1))
@@ -557,7 +543,7 @@ object HiveDdl {
       val create0 =
         s"CREATE TABLE $ine0`$lines0` (value STRING) USING text$loc0"
       val anchored = "^(?:" + regex + ")$"
-      val cols0 = splitTop(p.cols.get).map { c =>
+      val cols0 = SqlText.split(p.cols.get, angle = true).map { c =>
         val t = c.trim
         val name = t.split("\\s+", 2).head.replace("`", "")
         val typ = t.drop(t.split("\\s+", 2).head.length).trim
@@ -603,7 +589,7 @@ object HiveDdl {
       val tok =
         if (quoted.isDefined) "(\"[^\"]*\"|\\[[^\\]]*\\]|[^" + fdRe + "]*)"
         else "([^" + fdRe + "]*)"
-      val colsT = splitTop(p.cols.get).map { c =>
+      val colsT = SqlText.split(p.cols.get, angle = true).map { c =>
         val t = c.trim
         val name = t.split("\\s+", 2).head.replace("`", "")
         val typ = t.drop(t.split("\\s+", 2).head.length).trim
@@ -645,7 +631,7 @@ object HiveDdl {
           "byte-range separators (0x80..0xFF), which are not valid text: " + stmt)
     val partCols = partitionedBy(p.tail)
     val location = locationOf(p.tail)
-    val cols = splitTop(p.cols.get).map { c =>
+    val cols = SqlText.split(p.cols.get, angle = true).map { c =>
       val t = c.trim
       val name = t.split("\\s+", 2).head.replace("`", "")
       val rest = t.drop(t.split("\\s+", 2).head.length).trim
@@ -733,7 +719,7 @@ object HiveDdl {
         s"${parseField(s"__x$level", inner, level + 1, sepChar, nullRep, extendedBool)}) END"
     } else if (lower.startsWith("map")) {
       val inner = t.substring(t.indexOf('<') + 1, t.lastIndexOf('>'))
-      val parts = splitTop(inner)
+      val parts = SqlText.split(inner, angle = true)
       require(parts.size == 2, s"unparseable map type: $t")
       val d1 = regexLit(sepChar(level).toString)
       // LazyMapObjectInspector: only the FIRST key-value delimiter in a
@@ -753,7 +739,7 @@ object HiveDdl {
     } else if (lower.startsWith("struct")) {
       val inner = t.substring(t.indexOf('<') + 1, t.lastIndexOf('>'))
       val d = regexLit(sepChar(level).toString)
-      val fields = splitTop(inner).map { f =>
+      val fields = SqlText.split(inner, angle = true).map { f =>
         val colon = f.indexOf(':')
         require(colon > 0, s"unparseable struct field: $f")
         // the text serde's OIs carry LOWERCASED field names
@@ -772,7 +758,7 @@ object HiveDdl {
       // declared struct-tag encoding (SURVEY §1.2): struct<tag:tinyint,
       // field0..fieldN> with only the active branch non-null.
       val inner = t.substring(t.indexOf('<') + 1, t.lastIndexOf('>'))
-      val branches = splitTop(inner)
+      val branches = SqlText.split(inner, angle = true)
       val dchr = s"'${escape(sepChar(level).toString)}'"
       val tagE = s"CASE WHEN instr($e, $dchr) > 0 " +
         s"THEN substring($e, 1, instr($e, $dchr) - 1) ELSE $e END"
@@ -851,22 +837,4 @@ object HiveDdl {
   def symlinkTextTable(stmt: String): Option[String] =
     parseCreate(stmt).filter(_.tail.contains("SymlinkTextInputFormat"))
       .map(_.name)
-
-  private[compat] def matchParen(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    var inQuote = ' '
-    while (i < s.length) {
-      val c = s(i)
-      if (inQuote != ' ') { if (c == inQuote) inQuote = ' ' }
-      else c match {
-        case '\'' | '"' | '`' => inQuote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
 }

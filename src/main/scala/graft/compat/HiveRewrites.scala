@@ -1,5 +1,7 @@
 package graft.compat
 
+import graft.SqlText
+
 /** Statement-level HiveQL→Spark-SQL text rewrites for the reference
   * dialect surfaces Spark's grammar/runtime lacks, applied by the
   * corpus replay (and usable by any compat caller) just before
@@ -337,11 +339,11 @@ object HiveRewrites {
     // same conf): real \ tab LF CR in a field reach the script as the
     // two-character escapes, so embedded separators survive round trips
     val openIdx = stmt.indexOf('(', m.start)
-    val closeIdx = HiveDdl.matchParen(stmt, openIdx)
+    val closeIdx = SqlText.matchParen(stmt, openIdx)
     def esc(c: String): String =
       s"replace(replace(replace(replace($c, '\\\\', '\\\\\\\\'), " +
         "char(9), '\\\\t'), char(10), '\\\\n'), char(13), '\\\\r')"
-    val args = splitTop(stmt.substring(openIdx + 1, closeIdx))
+    val args = SqlText.split(stmt.substring(openIdx + 1, closeIdx))
       .map(a => esc(a.trim)).mkString(", ")
     val inner = (stmt.substring(m.start, openIdx + 1) + args +
       stmt.substring(closeIdx)).trim.stripSuffix(";")
@@ -421,7 +423,7 @@ object HiveRewrites {
       val tail = stmt.substring(p)
       val asClause: Option[String] = AsParen.findFirstMatchIn(tail) match {
         case Some(ap) =>
-          val close = HiveDdl.matchParen(stmt, p + ap.end - 1)
+          val close = SqlText.matchParen(stmt, p + ap.end - 1)
           if (close > 0) { val c = stmt.substring(p, close + 1); p = close + 1; Some(c) }
           else None
         case None =>
@@ -530,28 +532,26 @@ object HiveRewrites {
     val endKeywords = Seq("JOIN", "LEFT", "RIGHT", "FULL", "INNER", "CROSS",
       "WHERE", "GROUP", "ORDER", "SORT", "CLUSTER", "DISTRIBUTE", "LIMIT",
       "UNION", "HAVING")
-    def tokenFrom(s: String, word: String, from: Int): Int = {
-      val i = tokenAtDepth0(s.substring(from), word)
-      if (i < 0) -1 else from + i
-    }
     // ON extents
     final case class Span(start: Int, end: Int, repl: String)
     val spans = Seq.newBuilder[Span]
     val pure = scala.collection.mutable.Map.empty[String, Vector[String]]
     var from = 0
     var found = false
-    while ({ val p = tokenFrom(stmt, "ON", from); p >= 0 && {
+    while ({ val p = SqlText.keyword(stmt, "ON", from); p >= 0 && {
       val exprStart = p + 2
-      val ends = endKeywords.map(k => tokenFrom(stmt, k, exprStart)).filter(_ >= 0)
+      val ends = endKeywords.map(k => SqlText.keyword(stmt, k, exprStart)).filter(_ >= 0)
       val exprEnd = if (ends.isEmpty) stmt.length else ends.min
       var expr = stmt.substring(exprStart, exprEnd).trim.stripSuffix(";").trim
       // unwrap a fully-parenthesizing outer paren (possibly repeated)
       var unwrapped = true
       while (unwrapped && expr.startsWith("(") &&
-          HiveDdl.matchParen(expr, 0) == expr.length - 1)
+          SqlText.matchParen(expr, 0) == expr.length - 1)
         { val inner = expr.substring(1, expr.length - 1).trim
           if (inner.isEmpty) unwrapped = false else expr = inner }
-      val conjuncts = splitTopAnd(expr)
+      val ands = SqlText.keywords(expr, "AND")
+      val conjuncts = ((0 +: ands.map(_ + 3)) zip (ands :+ expr.length))
+        .map { case (a, b) => expr.substring(a, b).trim }.filter(_.nonEmpty)
       // alias qualifiers only: a leading digit/dot means a decimal
       // literal's fraction point (`a.x > 1.5` qualifies only `a`)
       val AliasRef = "(?<![\\w.])([A-Za-z_]\\w*)\\s*\\.".r
@@ -620,7 +620,7 @@ object HiveRewrites {
     var last = 0
     "(?i)\\bover\\s*\\(".r.findAllMatchIn(stmt).foreach { m =>
       val open = m.end - 1
-      val close = HiveDdl.matchParen(stmt, open)
+      val close = SqlText.matchParen(stmt, open)
       if (close > 0 && m.start >= last) {
         var body = stmt.substring(open + 1, close)
         aliases.foreach { case (a, expr) =>
@@ -636,19 +636,6 @@ object HiveRewrites {
     sb.toString
   }
 
-  /** Split on depth-0 AND tokens. */
-  private def splitTopAnd(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var from = 0
-    var cont = true
-    while (cont) {
-      val i = tokenAtDepth0(s.substring(from), "AND")
-      if (i < 0) { out += s.substring(from).trim; cont = false }
-      else { out += s.substring(from, from + i).trim; from = from + i + 3 }
-    }
-    out.result().filter(_.nonEmpty)
-  }
-
   /** `CAST(e AS CHAR(n)|VARCHAR(n))` truncates to n in the reference
     * (HiveBaseChar.enforceMaxLength — GenericUDFToChar/ToVarchar never
     * error); Spark under preserveCharVarcharTypeInfo ERRORS on overflow
@@ -660,12 +647,12 @@ object HiveRewrites {
     val CastOpen = "(?is)\\bcast\\s*\\(".r
     val m = CastOpen.findFirstMatchIn(stmt).getOrElse(return stmt)
     val open = m.end - 1
-    val close = HiveDdl.matchParen(stmt, open)
+    val close = SqlText.matchParen(stmt, open)
     if (close < 0) return stmt
     val inner = charCastTruncate(stmt.substring(open + 1, close))
     val rest = charCastTruncate(stmt.substring(close + 1))
     // the LAST depth-0 AS splits expression from target type
-    val asIdx = lastTokenAtDepth0(inner, "AS")
+    val asIdx = SqlText.keywords(inner, "AS").lastOption.getOrElse(-1)
     val rebuilt =
       if (asIdx < 0) s"${m.matched}$inner)"
       else {
@@ -679,19 +666,6 @@ object HiveRewrites {
         }
       }
     stmt.substring(0, m.start) + rebuilt + rest
-  }
-
-  /** Offset of the LAST depth-0 occurrence of a keyword token. */
-  private def lastTokenAtDepth0(s: String, word: String): Int = {
-    var last = -1
-    var from = 0
-    while (from < s.length) {
-      val i = tokenAtDepth0(s.substring(from), word)
-      if (i < 0) return last
-      last = from + i
-      from = last + word.length
-    }
-    last
   }
 
   /** `t TABLESAMPLE (BUCKET x OUT OF y)` — the NO-`ON` physical form —
@@ -735,7 +709,7 @@ object HiveRewrites {
     // GROUP BY (a subquery), else the whole statement — tokens outside
     // every grouped scope are COLUMN references to the aliased value
     val scopes = GbRe.findAllMatchIn(stmt).flatMap { gb =>
-      val n = splitTop(gb.group(1)).size
+      val n = SqlText.split(gb.group(1)).size
       if (n <= 0 || n > 16) None
       else {
         val expr = (0 until n).map { i =>
@@ -745,7 +719,7 @@ object HiveRewrites {
         var i2 = 0
         while (i2 < stmt.length) {
           if (stmt.charAt(i2) == '(') {
-            val c = HiveDdl.matchParen(stmt, i2)
+            val c = SqlText.matchParen(stmt, i2)
             if (c > gb.start && i2 < gb.start && c - i2 < best._2 - best._1)
               best = (i2, c)
           }
@@ -787,7 +761,7 @@ object HiveRewrites {
     for (m <- Re.findAllMatchIn(stmt)) {
       if (m.start >= last) {
         val open = m.end - 1
-        val close = HiveDdl.matchParen(stmt, open)
+        val close = SqlText.matchParen(stmt, open)
         if (close > open) {
           var body = stmt.substring(open + 1, close)
           if ("(?is)\\b(order|sort)\\s+by\\b".r.findFirstIn(body).isEmpty)
@@ -823,7 +797,7 @@ object HiveRewrites {
       nm match {
         case Some(em) =>
           val open = i + em.end - 1
-          val close = HiveDdl.matchParen(stmt, open)
+          val close = SqlText.matchParen(stmt, open)
           if (close < 0) ok = false
           else {
             entries += E(em.group(1).replace("`", "").toLowerCase,
@@ -873,7 +847,7 @@ object HiveRewrites {
     var last = 0
     for (m <- over.findAllMatchIn(stmt)) {
       val open = m.end - 1
-      val close = HiveDdl.matchParen(stmt, open)
+      val close = SqlText.matchParen(stmt, open)
       if (close > open && m.start >= last) {
         val body = stmt.substring(open + 1, close)
         val hasOrder = "(?is)\\b(order|sort)\\s+by\\b".r.findFirstIn(body).isDefined
@@ -904,16 +878,16 @@ object HiveRewrites {
     val m = HeadRe.findFirstMatchIn(stmt).getOrElse(return stmt)
     val rest = m.group(1)
     // the SELECT that ends the source list (depth-0)
-    val selIdx = tokenAtDepth0(rest, "SELECT")
+    val selIdx = SqlText.keyword(rest, "SELECT")
     if (selIdx < 0) return stmt
     val (srcList, tail0) = (rest.substring(0, selIdx), rest.substring(selIdx + "SELECT".length))
     val tail = tail0.trim.stripSuffix(";")
-    if (tokenAtDepth0(tail, "WHERE") >= 0) return stmt // untranslated: loud decline
+    if (SqlText.keyword(tail, "WHERE") >= 0) return stmt // untranslated: loud decline
     val EntryRe = "(?is)^\\s*(preserve\\s+)?([\\w.`]+)\\s+(\\w+)\\s*\\((.*)\\)\\s*$".r
-    val entries = splitTop(srcList).map { e =>
+    val entries = SqlText.split(srcList).map { e =>
       EntryRe.findFirstMatchIn(e) match {
         case Some(em) => UjEntry(em.group(1) != null, em.group(2), em.group(3),
-          splitTop(em.group(4)).map(_.trim))
+          SqlText.split(em.group(4)).map(_.trim))
         case None => return stmt
       }
     }
@@ -958,9 +932,9 @@ object HiveRewrites {
       case None => once
       case Some(m) =>
         val subOpen = m.end - 1
-        val subClose = HiveDdl.matchParen(once, subOpen)
+        val subClose = SqlText.matchParen(once, subOpen)
         if (subClose < 0) return once
-        val noopClose = HiveDdl.matchParen(once, once.lastIndexOf('(', subOpen - 1)
+        val noopClose = SqlText.matchParen(once, once.lastIndexOf('(', subOpen - 1)
           match { case -1 => return once; case x => x })
         if (noopClose < subClose) return once
         val tail = once.substring(subClose + 1, noopClose)
@@ -1001,20 +975,9 @@ object HiveRewrites {
     var i = 0
     val n = stmt.length
     while (i < n) {
-      stmt.charAt(i) match {
-        case q @ ('\'' | '"' | '`') =>
-          sb.append(q); i += 1
-          while (i < n && stmt.charAt(i) != q) {
-            if (stmt.charAt(i) == '\\' && i + 1 < n) { sb.append(stmt.charAt(i)).append(stmt.charAt(i + 1)); i += 2 }
-            else { sb.append(stmt.charAt(i)); i += 1 }
-          }
-          if (i < n) { sb.append(q); i += 1 }
-        case '-' if i + 1 < n && stmt.charAt(i + 1) == '-' =>
-          val e = stmt.indexOf('\n', i) match { case -1 => n; case x => x }
-          sb.append(stmt.substring(i, e)); i = e
-        case '/' if i + 1 < n && stmt.charAt(i + 1) == '*' =>
-          val e = stmt.indexOf("*/", i + 2) match { case -1 => n; case x => x + 2 }
-          sb.append(stmt.substring(i, e)); i = e
+      val skipped = SqlText.skip(stmt, i)
+      if (skipped > i) { sb.append(stmt.substring(i, skipped)); i = skipped }
+      else stmt.charAt(i) match {
         case c if (c.isDigit || (c == '.' && i + 1 < n && stmt.charAt(i + 1).isDigit)) &&
             (i == 0 || !isNumBoundary(stmt.charAt(i - 1))) =>
           val m = NumRe.findFirstMatchIn(stmt.substring(i)).get
@@ -1053,40 +1016,6 @@ object HiveRewrites {
 
   private def isNumBoundary(c: Char): Boolean = c.isLetterOrDigit || c == '_' || c == '.'
 
-  // ------------------------------------------------------------------ //
-  // depth-0 scanning helpers (quote/comment-aware)                      //
-  // ------------------------------------------------------------------ //
-
-  /** Offset of a depth-0 keyword token, -1 if absent. */
-  private[compat] def tokenAtDepth0(s: String, word: String): Int = {
-    var i = 0
-    var depth = 0
-    val w = word.length
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case '\'' | '"' | '`' =>
-          val q = s.charAt(i); i += 1
-          while (i < s.length && s.charAt(i) != q) {
-            if (s.charAt(i) == '\\') i += 2 else i += 1
-          }
-          i += 1
-        case '-' if i + 1 < s.length && s.charAt(i + 1) == '-' =>
-          i = s.indexOf('\n', i) match { case -1 => s.length; case n => n }
-        case c if depth == 0 && c.toUpper == word.charAt(0) &&
-            s.regionMatches(true, i, word, 0, w) &&
-            (i == 0 || !isIdent(s.charAt(i - 1))) &&
-            (i + w >= s.length || !isIdent(s.charAt(i + w))) =>
-          return i
-        case _ => i += 1
-      }
-    }
-    -1
-  }
-
-  private def isIdent(c: Char): Boolean = c.isLetterOrDigit || c == '_'
-
   /** The reference DE-DUPLICATES its grouping-set list — `GROUP BY a
     * GROUPING SETS ((a), (a))` emits every group ONCE (the sets become
     * a bitmask SET during analysis; groupby_grouping_sets1's and
@@ -1099,39 +1028,14 @@ object HiveRewrites {
       "\\bgrouping\\s+sets\\s*\\(").r
     val m = Re.findFirstMatchIn(stmt).getOrElse(return stmt)
     val open = m.end - 1
-    var depth = 0
-    var close = -1
-    var i = open
-    while (i < stmt.length && close < 0) {
-      stmt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) close = i
-        case _ =>
-      }
-      i += 1
-    }
+    val close = SqlText.matchParen(stmt, open)
     if (close < 0) return stmt
-    val sets = splitTop(stmt.substring(open + 1, close))
+    val sets = SqlText.split(stmt.substring(open + 1, close)).map(_.trim)
     def norm(x: String) =
       x.trim.stripPrefix("(").stripSuffix(")").replaceAll("\\s+", "").toLowerCase
     val seen = scala.collection.mutable.Set.empty[String]
     val kept = sets.filter(x => seen.add(norm(x)))
     if (kept.size == sets.size) return stmt
     stmt.substring(0, open + 1) + kept.mkString(", ") + stmt.substring(close)
-  }
-
-  /** Split on depth-0 commas. */
-  private[compat] def splitTop(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    s.foreach {
-      case '(' => depth += 1; cur.append('(')
-      case ')' => depth -= 1; cur.append(')')
-      case ',' if depth == 0 => out += cur.toString; cur.clear()
-      case ch => cur.append(ch)
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
   }
 }

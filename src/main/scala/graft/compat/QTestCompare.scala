@@ -5,6 +5,8 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.types.StructType
 
+import graft.SqlText
+
 import QTestReplay.{Block, Mask}
 
 /** Block classification and got-vs-want comparators for the corpus
@@ -102,7 +104,7 @@ private[compat] object QTestCompare {
   /** Depth-0 ORDER BY (outside parens/quotes/comments) — the statement
     * pins its OUTPUT order, so the comparison must too. */
   private[compat] def topLevelOrderBy(q: String): Boolean = {
-    val i = HiveRewrites.tokenAtDepth0(q, "ORDER")
+    val i = SqlText.keyword(q, "ORDER")
     i >= 0 && "(?is)^order\\s+by\\b".r.findFirstIn(q.substring(i)).isDefined
   }
 

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.SqlText
+
 /** .q-side statement recovery: the echo in .q.out masks LOAD paths
   * and locations, so DDL replay reads the original statements and
   * aligns them 1:1 with the .q.out blocks (set/dfs/add commands make
@@ -12,37 +14,16 @@ import org.apache.spark.sql.SparkSession
   * behavior unchanged. */
 private[compat] object QTestSource {
 
-  /** Split a .q file into executable statements (quote- and
-    * comment-aware ';' split; set/reset/dfs/add/delete commands — which
-    * produce no .q.out block — removed). */
-  def parseQ(text: String): Seq[String] = {
-    val stmts = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      text(i) match {
-        case '\'' | '"' =>
-          val q = text(i); cur.append(q); i += 1
-          while (i < n && text(i) != q) {
-            if (text(i) == '\\' && i + 1 < n) { cur.append(text(i)).append(text(i + 1)); i += 2 }
-            else { cur.append(text(i)); i += 1 }
-          }
-          if (i < n) { cur.append(q); i += 1 }
-        case '-' if i + 1 < n && text(i + 1) == '-' =>
-          val e = text.indexOf('\n', i) match { case -1 => n; case x => x }
-          cur.append(text.substring(i, e)); i = e
-        case ';' =>
-          stmts += cur.toString; cur.clear(); i += 1
-        case c => cur.append(c); i += 1
-      }
-    }
-    if (cur.toString.trim.nonEmpty) stmts += cur.toString
-    stmts.result()
+  /** Split a .q file into executable statements (a ';' split outside
+    * literals and comments, [[graft.SqlText]]; set/reset/dfs/add/delete
+    * commands — which produce no .q.out block — removed). */
+  def parseQ(text: String): Seq[String] = statements(text).filterNot(isCliCommand)
+
+  /** Every ';'-separated statement, its `--` comment lines dropped. */
+  private def statements(text: String): Seq[String] =
+    SqlText.split(text, ';')
       .map(s => s.linesIterator.filterNot(_.trim.startsWith("--")).mkString("\n").trim)
       .filter(_.nonEmpty)
-      .filterNot(isCliCommand)
-  }
 
   private[compat] def isCliCommand(s: String): Boolean = {
     val ws = s.split("[\\s=]+", 3).map(_.toLowerCase)
@@ -61,35 +42,8 @@ private[compat] object QTestSource {
   def parseQWithCommands(text: String): Seq[(Seq[String], String)] = {
     val out = Seq.newBuilder[(Seq[String], String)]
     var pending = Seq.newBuilder[String]
-    // re-split exactly as parseQ does, but partition instead of dropping
-    val all = {
-      val stmts = Seq.newBuilder[String]
-      val cur = new StringBuilder
-      var i = 0
-      val n = text.length
-      while (i < n) {
-        text(i) match {
-          case '\'' | '"' =>
-            val q = text(i); cur.append(q); i += 1
-            while (i < n && text(i) != q) {
-              if (text(i) == '\\' && i + 1 < n) { cur.append(text(i)).append(text(i + 1)); i += 2 }
-              else { cur.append(text(i)); i += 1 }
-            }
-            if (i < n) { cur.append(q); i += 1 }
-          case '-' if i + 1 < n && text(i + 1) == '-' =>
-            val e = text.indexOf('\n', i) match { case -1 => n; case x => x }
-            cur.append(text.substring(i, e)); i = e
-          case ';' =>
-            stmts += cur.toString; cur.clear(); i += 1
-          case c => cur.append(c); i += 1
-        }
-      }
-      if (cur.toString.trim.nonEmpty) stmts += cur.toString
-      stmts.result()
-        .map(s => s.linesIterator.filterNot(_.trim.startsWith("--")).mkString("\n").trim)
-        .filter(_.nonEmpty)
-    }
-    all.foreach { s =>
+    // split as parseQ does, but partition instead of dropping
+    statements(text).foreach { s =>
       if (s.toLowerCase.startsWith("dfs") ||
           // `reset [-d] [keys...]` is conf state the echo mirror tracks
           "(?is)^reset\\b".r.findFirstIn(s).isDefined ||

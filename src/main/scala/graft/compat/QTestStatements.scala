@@ -10,6 +10,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.SqlText
+
 import QTestReplay._
 import QTestRender._
 
@@ -775,7 +777,7 @@ private[compat] object QTestStatements {
         staged(t, s"SELECT * FROM $t WHERE NOT coalesce(($cond), false)")
       case upd(t, setList, w) =>
         val cond = Option(w).getOrElse("true")
-        val assigns = HiveRewrites.splitTop(setList).map { a =>
+        val assigns = SqlText.split(setList).map { a =>
           val eq = a.indexOf('=')
           require(eq > 0, s"unparseable SET assignment: $a")
           a.substring(0, eq).trim.replace("`", "").toLowerCase -> a.substring(eq + 1).trim

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
 
+import graft.SqlText
+
 /** Hive multi-insert (`FROM src INSERT OVERWRITE t1 SELECT ... INSERT
   * INTO t2 SELECT ...`, HiveParser.g:2482-2523; the reference fans one
   * scan out to many FileSinkOperators — SemanticAnalyzer.genBodyPlan
@@ -73,50 +75,11 @@ object MultiInsert {
   // one alternation per Hive target form (HiveParser.g destination rule):
   // OVERWRITE DIRECTORY 'path' | OVERWRITE TABLE t | INTO [TABLE] t —
   // anchored at a clause start; clause boundaries come from the
-  // quote/paren-aware scan below, NOT from this regex
+  // depth-0 keyword scan of [[graft.SqlText]], NOT from this regex
   private val InsertHead =
     ("""(?is)^INSERT\s+(?:OVERWRITE\s+DIRECTORY\s+'([^']+)'""" +
      """|OVERWRITE\s+TABLE\s+([\w.]+)|INTO\s+(?:TABLE\s+)?([\w.]+))""" +
      """\s+(SELECT\s.*)$""").r
-
-  private def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-
-  /** Offsets of every TOP-LEVEL occurrence of any of `words` — outside
-    * single-quoted literals (with '' escapes) and outside parentheses
-    * (subqueries, function calls). The quote/paren awareness is what
-    * keeps a keyword inside a scalar subquery or a string literal (e.g.
-    * a projection of the literal 'insert into audit') from splitting a
-    * clause. */
-  private def topLevelOffsets(s: String, words: Seq[String]): Vector[Int] = {
-    var depth = 0; var inQuote = false
-    val found = Vector.newBuilder[Int]
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') i += 1
-          else inQuote = false
-        }
-      } else c match {
-        case '\'' => inQuote = true
-        case '('  => depth += 1
-        case ')'  => depth -= 1
-        case _ if depth == 0 =>
-          if (i == 0 || !isWordChar(s.charAt(i - 1))) {
-            val hit = words.exists { w =>
-              val end = i + w.length
-              end <= s.length && s.regionMatches(true, i, w, 0, w.length) &&
-                (end == s.length || !isWordChar(s.charAt(end)))
-            }
-            if (hit) found += i
-          }
-        case _ => ()
-      }
-      i += 1
-    }
-    found.result()
-  }
 
   /** Split a SELECT body into (projection, tail) at the first top-level
     * clause keyword — WHERE, GROUP, ORDER, LIMIT, DISTRIBUTE, SORT,
@@ -127,7 +90,7 @@ object MultiInsert {
   private def splitBody(body: String): (String, String) = {
     val kws = Seq("where", "group", "order", "limit",
       "distribute", "sort", "cluster", "having")
-    topLevelOffsets(body, kws).headOption match {
+    SqlText.keywords(body, kws: _*).headOption match {
       case Some(i) => (body.substring(0, i).trim, " " + body.substring(i))
       case None => (body, "")
     }
@@ -167,12 +130,11 @@ object MultiInsert {
         // clause boundaries from the quote/paren-aware scan (a string
         // literal containing "insert into ..." must not split a clause),
         // then each clause parses against the anchored head regex
-        val offsets = topLevelOffsets(inserts, Seq("insert"))
+        val offsets = SqlText.keywords(inserts, "insert")
         require(offsets.headOption.contains(0),
           s"expected the destination list to start with INSERT: $inserts")
-        val clauses = (offsets :+ inserts.length).sliding(2).map {
-          case Vector(a, b) => inserts.substring(a, b).trim
-        }.toVector
+        val clauses = (offsets :+ inserts.length).sliding(2)
+          .map(w => inserts.substring(w(0), w(1)).trim).toVector
         val queued = clauses.foldLeft(from(srcDf)) { (mi, clause) =>
           clause match {
             case InsertHead(path, owTable, intoTable, body) =>
@@ -206,10 +168,9 @@ object MultiInsert {
     * the way a regex split would. */
   private def splitFrom(statement: String): Option[(String, String)] = {
     val t = statement.trim
-    if (t.length < 5 || !t.regionMatches(true, 0, "FROM", 0, 4) ||
-        isWordChar(t.charAt(4))) return None
+    if (SqlText.keyword(t, "FROM") != 0) return None
     val rest = t.substring(4)
-    topLevelOffsets(rest, Seq("insert")).headOption.flatMap { off =>
+    SqlText.keywords(rest, "insert").headOption.flatMap { off =>
       val src = rest.substring(0, off).trim
       val inserts = rest.substring(off).trim
       if (src.isEmpty) None else Some((src, inserts))

@@ -1,5 +1,7 @@
 package graft.hplsql
 
+import graft.SqlText
+
 /** Offline dialect-DDL conversion — the reference's `-offline` mode
   * (hplsql/src/main/java/org/apache/hive/hplsql/Converter.java:37
   * dataType; Meta.java:174 normalizeIdentifier/getTargetSchemaName;
@@ -76,24 +78,9 @@ object DialectDdl {
     val wsBeforeParen = between.reverse.takeWhile(_.isWhitespace).reverse
 
     // column list: split at depth-0 commas up to the matching ')'
-    var depth = 0
-    var j = open
-    var close = -1
-    val items = scala.collection.mutable.ArrayBuffer.empty[String]
-    var itemStart = open + 1
-    while (j < text.length && close < 0) {
-      text(j) match {
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) { items += text.substring(itemStart, j); close = j }
-        case ',' if depth == 1 =>
-          items += text.substring(itemStart, j); itemStart = j + 1
-        case _ =>
-      }
-      j += 1
-    }
+    val close = SqlText.matchParen(text, open)
     if (close < 0) return None
+    val items = SqlText.split(text.substring(open + 1, close))
 
     val kept = items.flatMap(convertColumnItem)
     if (kept.isEmpty) return None
@@ -112,7 +99,7 @@ object DialectDdl {
   }
 
   private def endOfStatement(text: String, from: Int): Int = {
-    val semi = text.indexOf(';', from)
+    val semi = SqlText.find(text, from)(text(_) == ';')
     val go = """(?im)^\s*GO\s*$""".r.findFirstMatchIn(text.substring(from))
       .map(_.start + from).getOrElse(Int.MaxValue)
     math.min(if (semi < 0) Int.MaxValue else semi, go) match {

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
+import graft.SqlText
+
 /** The reference's `matchpath(on T ...)` PTF **invocation syntax**
   * (ql/src/java/org/apache/hadoop/hive/ql/udf/ptf/MatchPath.java:81,
   * registered as a table function at FunctionRegistry.java:167/475;
@@ -55,7 +57,7 @@ object MatchPathSql {
     val m = "(?is)\\bmatchpath\\s*\\(\\s*on\\b".r.findFirstMatchIn(stmt)
       .getOrElse(return stmt)
     val open = stmt.indexOf('(', m.start)
-    val close = matching(stmt, open)
+    val close = SqlText.matchParen(stmt, open)
     if (close < 0) return stmt
     val df = run(spark, stmt.substring(open + 1, close))
     val view = s"graft_matchpath_${viewSeq.incrementAndGet()}"
@@ -68,37 +70,39 @@ object MatchPathSql {
   def run(spark: SparkSession, body0: String): DataFrame = {
     val body = body0.replaceFirst("(?is)^\\s*on\\b", "").trim
     // arg list starts at the first depth-0 `arg<digits>(` token
-    val argAt = tokenAt(body, "(?is)\\barg\\d+\\s*\\(")
+    val argRe = java.util.regex.Pattern.compile("(?i)(?<!\\w)arg\\d+\\s*\\(")
+      .matcher(body).useTransparentBounds(true)
+    val argAt = SqlText.find(body)(argRe.region(_, body.length).lookingAt())
     require(argAt >= 0, s"matchpath: no arg list in: $body0")
     val onSpec = body.substring(0, argAt)
-    val args = splitTop(body.substring(argAt)).map { a =>
+    val args = items(body.substring(argAt)).map { a =>
       val o = a.indexOf('(')
-      val c = matching(a, o)
+      val c = SqlText.matchParen(a, o)
       require(o > 0 && c > o, s"matchpath: unparseable arg: $a")
       a.substring(o + 1, c).trim
     }
     require(args.length >= 4 && args.length % 2 == 0,
       s"matchpath signature: pattern, (symbol, expr)+, result list; got ${args.length} args")
     val pattern = unquote(args.head)
-    val resultList = splitTop(unquote(args.last))
+    val resultList = items(unquote(args.last))
     val symbols = args.tail.init.grouped(2)
       .map { case Seq(n, e) => unquote(n).toLowerCase -> e }.toSeq
 
     // on-spec: <input> [distribute|partition by ...] [sort|order by ...]
-    val distAt = tokenAt(onSpec, "(?is)\\b(distribute|partition)\\s+by\\b")
-    val sortAt = tokenAt(onSpec, "(?is)\\b(sort|order)\\s+by\\b")
+    val distAt = SqlText.keywords(onSpec, "distribute", "partition").headOption.getOrElse(-1)
+    val sortAt = SqlText.keywords(onSpec, "sort", "order").headOption.getOrElse(-1)
     val inputEnd = Seq(distAt, sortAt).filter(_ >= 0)
       .reduceOption(_ min _).getOrElse(onSpec.length)
     val input = onSpec.substring(0, inputEnd).trim
     def byList(at: Int, end: Int): Seq[String] =
       if (at < 0) Nil
-      else splitTop(onSpec.substring(at, end)
+      else items(onSpec.substring(at, end)
         .replaceFirst("(?is)^\\s*(distribute|partition|sort|order)\\s+by\\b", ""))
     val partCols = byList(distAt, if (sortAt > distAt) sortAt else onSpec.length)
     val sortCols = byList(sortAt, if (distAt > sortAt) distAt else onSpec.length)
 
     val in =
-      if (input.startsWith("(")) spark.sql(input.substring(1, matching(input, 0)))
+      if (input.startsWith("(")) spark.sql(input.substring(1, SqlText.matchParen(input, 0)))
       else spark.table(input.split("\\s+").head)
     matchPath(spark, in, partCols, sortCols, pattern, symbols, resultList)
   }
@@ -229,8 +233,8 @@ object MatchPathSql {
     case _ => 0
   }
 
-  // -- small text utilities (quote/paren-aware; the statement text is
-  // -- HiveQL, so single quotes and backticks protect content)
+  // -- small text utilities; literals, comments and parens as
+  // -- [[graft.SqlText]] scans them
 
   private def unquote(s0: String): String = {
     val s = s0.trim
@@ -239,74 +243,6 @@ object MatchPathSql {
     else s
   }
 
-  private def splitTop(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var i = 0
-    var b = new StringBuilder
-    while (i < s.length) {
-      s(i) match {
-        case '\'' =>
-          val e = closeQuote(s, i)
-          b.append(s.substring(i, e + 1)); i = e
-        case '(' => depth += 1; b.append('(')
-        case ')' => depth -= 1; b.append(')')
-        case ',' if depth == 0 => out += b.result(); b = new StringBuilder
-        case c => b.append(c)
-      }
-      i += 1
-    }
-    val last = b.result()
-    if (last.trim.nonEmpty) out += last
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
-  private def tokenAt(s: String, re: String): Int = {
-    val r = re.r
-    var depth = 0
-    var i = 0
-    while (i < s.length) {
-      s(i) match {
-        case '\'' => i = closeQuote(s, i)
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ if depth == 0 &&
-            (i == 0 || !s(i - 1).isLetterOrDigit && s(i - 1) != '_') =>
-          r.findPrefixMatchOf(s.substring(i)) match {
-            case Some(_) => return i
-            case None =>
-          }
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  private def matching(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      s(i) match {
-        case '\'' => i = closeQuote(s, i)
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  private def closeQuote(s: String, start: Int): Int = {
-    var i = start + 1
-    while (i < s.length) {
-      if (s(i) == '\\') i += 1
-      else if (s(i) == '\'') return i
-      i += 1
-    }
-    s.length - 1
-  }
+  /** Depth-0 comma-separated items, trimmed, empty ones dropped. */
+  private def items(s: String): Seq[String] = SqlText.split(s).map(_.trim).filter(_.nonEmpty)
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 
+import graft.SqlText
+
 /** `QUALIFY` — Teradata's window-predicate clause (used in the
   * reference's own corpus: hplsql/src/test/queries/offline/
   * select_teradata.sql `QUALIFY ROW_NUMBER() OVER (...) = 1`; modern
@@ -35,8 +37,9 @@ import org.apache.spark.sql.types.StructType
   * Scope: QUALIFY is recognized at the top level of the statement and
   * inside every parenthesized subexpression (i.e., any parenthesized
   * subquery), outside string literals, comments, and backticked
-  * identifiers. Statements without the keyword pass through with ZERO
-  * rewriting cost beyond one scan for the token.
+  * identifiers as [[graft.SqlText]] defines them. Statements without the
+  * keyword pass through with ZERO rewriting cost beyond one scan for the
+  * token.
   */
 object QualifyRewrite {
 
@@ -50,46 +53,35 @@ object QualifyRewrite {
     val out = new StringBuilder
     var i = 0
     while (i < s.length) {
-      s(i) match {
-        case '(' =>
-          val close = matching(s, i)
-          if (close < 0) { out.append(s.substring(i)); i = s.length }
-          else {
-            out.append('(').append(rewriteBlock(s.substring(i + 1, close))).append(')')
-            i = close + 1
-          }
-        case '\'' | '"' | '`' =>
-          val e = closeQuote(s, i)
-          out.append(s.substring(i, e)); i = e
-        case '-' if i + 1 < s.length && s(i + 1) == '-' =>
-          val e = s.indexOf('\n', i) match { case -1 => s.length; case n => n }
-          out.append(s.substring(i, e)); i = e
-        case '/' if i + 1 < s.length && s(i + 1) == '*' =>
-          val e = closeBlockComment(s, i)
-          out.append(s.substring(i, e)); i = e
-        case _ => out.append(s(i)); i += 1
-      }
+      val e = SqlText.skip(s, i)
+      if (e > i) { out.append(s.substring(i, e)); i = e }
+      else if (s(i) == '(') {
+        val close = SqlText.matchParen(s, i)
+        if (close < 0) { out.append(s.substring(i)); i = s.length }
+        else {
+          out.append('(').append(rewriteBlock(s.substring(i + 1, close))).append(')')
+          i = close + 1
+        }
+      } else { out.append(s(i)); i += 1 }
     }
     applyQualify(out.toString)
   }
 
   /** Handle one depth-0 QUALIFY in a block whose subgroups are done. */
   private def applyQualify(s: String): String = {
-    val q = tokenAtDepth0(s, Word)
+    val q = SqlText.keyword(s, Word)
     if (q < 0) return s
     val head = s.substring(0, q)
     val after = s.substring(q + Word.length)
     // the predicate runs to a depth-0 ORDER BY / LIMIT / OFFSET (this
     // block's tail) or a set operator (the next branch), else EOS
-    val predEnd = Seq("ORDER", "LIMIT", "OFFSET", "UNION", "INTERSECT",
-        "EXCEPT", "MINUS")
-      .map(k => tokenAtDepth0(after, k)).filter(_ >= 0)
-      .sorted.headOption.getOrElse(after.length)
+    val predEnd = SqlText.keywords(after, "ORDER", "LIMIT", "OFFSET", "UNION",
+        "INTERSECT", "EXCEPT", "MINUS").headOption.getOrElse(after.length)
     val pred = after.substring(0, predEnd).trim
     val tail = after.substring(predEnd)
     require(pred.nonEmpty, "QUALIFY requires a predicate")
 
-    val from = tokenAtDepth0(head, "FROM")
+    val from = SqlText.keyword(head, "FROM")
     require(from >= 0, "QUALIFY requires a FROM clause in its query block")
     var selectList = head.substring(0, from)
     val rest = head.substring(from)
@@ -103,87 +95,14 @@ object QualifyRewrite {
     val outerSel = if (distinct) "SELECT DISTINCT" else "SELECT"
     s"$outerSel * EXCEPT (__qualify) FROM ($selectList, ($pred) AS __qualify $rest) __qualify_q WHERE __qualify " + tail
   }
-
-  /** Offset of a depth-0 keyword token (outside quotes/comments), -1 if
-    * absent. Word boundaries: neighbors must not be identifier chars. */
-  private def tokenAtDepth0(s: String, word: String): Int = {
-    var i = 0
-    var depth = 0
-    val w = word.length
-    while (i < s.length) {
-      s(i) match {
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case '\'' | '"' | '`' => i = closeQuote(s, i)
-        case '-' if i + 1 < s.length && s(i + 1) == '-' =>
-          i = s.indexOf('\n', i) match { case -1 => s.length; case n => n }
-        case '/' if i + 1 < s.length && s(i + 1) == '*' =>
-          i = closeBlockComment(s, i)
-        case c if depth == 0 && (c.toUpper == word(0)) &&
-            s.regionMatches(true, i, word, 0, w) &&
-            (i == 0 || !isIdentChar(s(i - 1))) &&
-            (i + w >= s.length || !isIdentChar(s(i + w))) =>
-          return i
-        case _ => i += 1
-      }
-    }
-    -1
-  }
-
-  private def isIdentChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
-
-  /** End offset (exclusive) of a `/* ... */` comment opening at `start`;
-    * an unterminated comment runs to EOS. No nesting (SQL comments don't
-    * nest in Spark's grammar default). */
-  private def closeBlockComment(s: String, start: Int): Int = {
-    val e = s.indexOf("*/", start + 2)
-    if (e < 0) s.length else e + 2
-  }
-
-  private[plans] def closeQuotePublic(s: String, start: Int): Int = closeQuote(s, start)
-  private[plans] def closeBlockCommentPublic(s: String, start: Int): Int = closeBlockComment(s, start)
-
-  private def closeQuote(s: String, start: Int): Int = {
-    val q = s(start)
-    var i = start + 1
-    while (i < s.length) {
-      if (s(i) == q) {
-        // '' escape inside single quotes
-        if (q == '\'' && i + 1 < s.length && s(i + 1) == '\'') i += 2
-        else return i + 1
-      } else if (s(i) == '\\' && q == '\'') i += 2
-      else i += 1
-    }
-    s.length
-  }
-
-  private def matching(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      s(i) match {
-        case '(' => depth += 1; i += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return i
-          i += 1
-        case '\'' | '"' | '`' => i = closeQuote(s, i)
-        case '-' if i + 1 < s.length && s(i + 1) == '-' =>
-          i = s.indexOf('\n', i) match { case -1 => s.length; case n => n }
-        case '/' if i + 1 < s.length && s(i + 1) == '*' =>
-          i = closeBlockComment(s, i)
-        case _ => i += 1
-      }
-    }
-    -1
-  }
 }
 
 /** `LIMIT <offset>, <count>` — the reference's two-operand limit clause
   * (HiveParser.g limitClause, HIVE-11531; MySQL's spelling), which Spark
   * spells `LIMIT <count> OFFSET <offset>`. A token-level rewrite outside
-  * quotes and comments; both operands must be integer literals (exactly
-  * the reference's grammar — expressions are not accepted there either).
+  * literals and comments ([[graft.SqlText]]); both operands must be
+  * integer literals (exactly the reference's grammar — expressions are
+  * not accepted there either).
   * Statements without a comma-LIMIT pass through unchanged. */
 object LimitCommaRewrite {
 
@@ -195,25 +114,17 @@ object LimitCommaRewrite {
     val out = new StringBuilder
     var i = 0
     while (i < sql.length) {
-      sql(i) match {
-        case '\'' | '"' | '`' =>
-          val e = QualifyRewrite.closeQuotePublic(sql, i)
-          out.append(sql.substring(i, e)); i = e
-        case '-' if i + 1 < sql.length && sql(i + 1) == '-' =>
-          val e = sql.indexOf('\n', i) match { case -1 => sql.length; case n => n }
-          out.append(sql.substring(i, e)); i = e
-        case '/' if i + 1 < sql.length && sql(i + 1) == '*' =>
-          val e = QualifyRewrite.closeBlockCommentPublic(sql, i)
-          out.append(sql.substring(i, e)); i = e
-        case c if (c == 'l' || c == 'L') => // candidate LIMIT token
-          val m = P.matcher(sql)
-          if (m.find(i) && m.start == i &&
-              (i == 0 || !Character.isLetterOrDigit(sql(i - 1)))) {
-            out.append(s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}")
-            i = m.end
-          } else { out.append(c); i += 1 }
-        case c => out.append(c); i += 1
-      }
+      val e = SqlText.skip(sql, i)
+      val c = sql(i)
+      if (e > i) { out.append(sql.substring(i, e)); i = e }
+      else if (c == 'l' || c == 'L') { // candidate LIMIT token
+        val m = P.matcher(sql)
+        if (m.find(i) && m.start == i &&
+            (i == 0 || !Character.isLetterOrDigit(sql(i - 1)))) {
+          out.append(s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}")
+          i = m.end
+        } else { out.append(c); i += 1 }
+      } else { out.append(c); i += 1 }
     }
     out.toString
   }

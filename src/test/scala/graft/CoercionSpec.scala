@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.plans.HiveDecimalArith
 
 /** Property-style tests for the divergence-prone semantics SURVEY.md
   * §7.3 flags (type coercion, integer division, pmod, null propagation)
@@ -133,5 +136,55 @@ class CoercionSpec extends AnyFunSuite {
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
+  }
+
+  // ---- Hive 2.1 decimal result types and UNION widening, derived by
+  // hand from the reference (GenericUDFOPDivide.deriveResultDecimalTypeInfo:118,
+  // GenericUDAFAverage.java:229, FunctionRegistry.getCommonClassForUnionAll:680)
+
+  private lazy val compat = {
+    val s = spark.newSession()
+    s.conf.set("graft.compat.hive.coercion", "true")
+    s
+  }
+
+  test("Hive divide type derivation: shrink with negative bias") {
+    // sum(decimal(20,10)) = (30,10) over count bigint (19,0):
+    // intDig=20, decDig=30, over by 12 -> decDig -= 12/2+1 = 23
+    assert(HiveDecimalArith.divideType(30, 10, 19, 0) ==
+      DecimalType(38, 23))
+    // key decimal(20,10) / literal 4 (constant digits: p2=1):
+    // intDig=10, decDig=max(6, 10+1+1)=12 -> (22,12)
+    assert(HiveDecimalArith.divideType(20, 10, 1, 0) ==
+      DecimalType(22, 12))
+    // small operands keep the unshrunk derivation
+    assert(HiveDecimalArith.divideType(10, 2, 5, 1) ==
+      DecimalType(17, 8))
+  }
+
+  test("Hive avg type derivation caps scale before integer digits") {
+    assert(HiveDecimalArith.avgType(20, 10) ==
+      DecimalType(24, 14))
+    // p+4 would pass 38: scale gives way, intPart is kept
+    assert(HiveDecimalArith.avgType(38, 18) ==
+      DecimalType(38, 18))
+  }
+
+  test("UNION widening is order-sensitive like getCommonClassForUnionAll") {
+    // string-first, double-second -> DOUBLE (implicitConvertible(string,
+    // double) tested first)
+    val d1 = compat.sql(
+      "select * from (select '1.5' v union all select cast(2.5 as double)) t")
+    assert(d1.schema.head.dataType == DoubleType)
+    assert(d1.collect().map(_.getDouble(0)).sorted.toSeq == Seq(1.5, 2.5))
+    // double-first, string-second -> STRING (number->string group
+    // conversion wins) — Spark's own pick, no rewrite
+    val d2 = compat.sql(
+      "select * from (select cast(2.5 as double) v union all select '1.5') t")
+    assert(d2.schema.head.dataType == StringType)
+    // engine sessions (no compat conf) keep Spark's string in BOTH
+    val e1 = spark.sql(
+      "select * from (select '1.5' v union all select cast(2.5 as double)) t")
+    assert(e1.schema.head.dataType == StringType)
   }
 }

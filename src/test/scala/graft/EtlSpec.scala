@@ -115,6 +115,24 @@ class EtlSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).toSeq == Seq("audit insert into log"))
   }
 
+  test("multi-insert SQL: double-quoted and backslash-escaped literals hide their keywords") {
+    val tmp = Files.createTempDirectory("graft_mi5").toString
+    Tables.registerAll(spark, sf)
+    // "where x" is a string literal, and 'it\'s' must not swallow the
+    // real WHERE after it
+    val written = MultiInsert.sql(spark,
+      s"""FROM (SELECT l_returnflag, l_quantity FROM lineitem) li
+         |INSERT OVERWRITE DIRECTORY '$tmp/dq' SELECT "where x" AS s WHERE l_quantity > 45
+         |INSERT OVERWRITE DIRECTORY '$tmp/esc' SELECT 'it\\'s' AS s WHERE l_quantity > 45""".stripMargin)
+    val hi = Tables.lineitem(spark, sf).filter(col("l_quantity") > 45).count()
+    assert(written(s"$tmp/dq") == hi)
+    assert(written(s"$tmp/esc") == hi)
+    assert(spark.read.parquet(s"$tmp/dq").select("s").distinct()
+      .collect().map(_.getString(0)).toSeq == Seq("where x"))
+    assert(spark.read.parquet(s"$tmp/esc").select("s").distinct()
+      .collect().map(_.getString(0)).toSeq == Seq("it's"))
+  }
+
   test("partitioned + bucketed write round-trips and prunes") {
     val tmp = Files.createTempDirectory("graft_w").toString
     Tables.orders(spark, sf)

@@ -166,4 +166,59 @@ class HiveDdlSpec extends AnyFunSuite {
     assert(view.contains("substr(") && view.contains("AS char(3)"), view)
     assert(view.contains("AS varchar(4)"), view)
   }
+
+  // ---- column and property lists: split and matched by graft.SqlText ---
+
+  /** Column names of a lines-table parsing view, in select order. */
+  private def viewColumns(stmt: String): Seq[String] = {
+    val Seq(_, view) = HiveDdl.translateStatements(stmt, load, Set.empty)
+    "AS `([^`]*)`".r.findAllMatchIn(view).map(_.group(1)).toSeq
+  }
+
+  test("translation output is unchanged on lists without literals in them") {
+    assert(HiveDdl.translate("CREATE TABLE t (a INT, b DECIMAL(8,4)) PARTITIONED BY " +
+      "(p STRING COMMENT 'part', q DECIMAL(10,2)) STORED AS ORC") ==
+      "CREATE TABLE t (a INT, b DECIMAL(8,4), p STRING, q DECIMAL(10,2)) USING orc PARTITIONED BY (p, q)")
+    assert(HiveDdl.translate("CREATE TABLE IF NOT EXISTS t (a map<string,string>, " +
+      "b struct<x:int,y:string>) CLUSTERED BY (a) SORTED BY (a DESC) INTO 4 BUCKETS") ==
+      "CREATE TABLE IF NOT EXISTS t (a map<string,string>, b struct<x:int,y:string>) " +
+        "USING parquet CLUSTERED BY (a)  INTO 4 BUCKETS")
+    assert(HiveDdl.translate("CREATE TABLE t (a STRING) ROW FORMAT DELIMITED FIELDS " +
+      "TERMINATED BY ',' TBLPROPERTIES ('k'='v', 'x'='(y)')") ==
+      "CREATE TABLE t (a STRING) USING parquet")
+    assert(HiveDdl.translateStatements("CREATE TABLE t (a STRING, b DECIMAL(8,4)) " +
+      "PARTITIONED BY (p INT) ROW FORMAT DELIMITED FIELDS TERMINATED BY '|'", load, Set.empty) ==
+      Seq("CREATE TABLE t (a STRING, b DECIMAL(8,4), p INT) USING csv OPTIONS " +
+        "(sep '|', quote '\\u0000', nullValue '\\\\N', emptyValue '') PARTITIONED BY (p)"))
+    assert(HiveDdl.translateStatements(
+      "CREATE TABLE t (a STRING COMMENT 'plain', b map<string,int>) STORED AS TEXTFILE",
+      load, Set.empty) == Seq(
+      "CREATE TABLE `t__lines` (value STRING) USING text",
+      "CREATE VIEW `t` AS SELECT nullif(element_at(__f, 1), '\\\\N') AS `a`, " +
+        "CASE WHEN nullif(element_at(__f, 2), '\\\\N') IS NULL THEN NULL ELSE " +
+        "map_from_entries(transform(split(element_at(__f, 2), '\\\\Q\u0002\\\\E'), __p1 -> " +
+        "struct(nullif(CASE WHEN instr(__p1, '\u0003') > 0 THEN substring(__p1, 1, " +
+        "instr(__p1, '\u0003') - 1) ELSE __p1 END, '\\\\N'), CAST(nullif(CASE WHEN " +
+        "instr(__p1, '\u0003') > 0 THEN substring(__p1, instr(__p1, '\u0003') + 1) END, " +
+        "'\\\\N') AS int)))) END AS `b` FROM (SELECT split(value, '\\\\Q\\u0001\\\\E') " +
+        "AS __f FROM `t__lines` __lsrc) __t"))
+    assert(viewColumns("CREATE TABLE t (a STRING, b map<string,int>, " +
+      "c struct<x:int,y:array<string>>, d uniontype<int,string>) STORED AS TEXTFILE") ==
+      Seq("a", "b", "c", "d"))
+  }
+
+  test("a comma inside a column COMMENT does not split the column") {
+    assert(viewColumns("CREATE TABLE t (a INT COMMENT 'x, y', b STRING) STORED AS TEXTFILE") ==
+      Seq("a", "b"))
+  }
+
+  test("an angle bracket inside a column COMMENT does not nest") {
+    assert(viewColumns("CREATE TABLE t (a INT COMMENT 'a<b', b STRING) STORED AS TEXTFILE") ==
+      Seq("a", "b"))
+  }
+
+  test("a backslash-escaped quote inside a column COMMENT keeps the column list balanced") {
+    assert(HiveDdl.translate("CREATE TABLE t (a STRING COMMENT 'it\\'s', b INT)") ==
+      "CREATE TABLE t (a STRING COMMENT 'it\\'s', b INT) USING parquet")
+  }
 }

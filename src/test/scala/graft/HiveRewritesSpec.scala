@@ -108,4 +108,42 @@ class HiveRewritesSpec extends AnyFunSuite {
     val nested = HiveRewrites("select x from noop(on noopwithmap(on noop(on t partition by p order by s) partition by p order by s) partition by p order by s)")
     assert(nested == "select x from t", nested)
   }
+
+  test("paren, keyword and list scans keep each rewrite's output") {
+    val pins = Seq(
+      "SELECT CAST(concat(a, 'b') AS VARCHAR(3)), CAST(x AS CHAR(2)) FROM t" ->
+        ("SELECT CAST(substr(CAST(concat(a, 'b') AS STRING), 1, 3) AS VARCHAR(3)), " +
+          "CAST(substr(CAST(x AS STRING), 1, 2) AS CHAR(2)) FROM t"),
+      "SELECT a, b, GROUPING__ID FROM t GROUP BY a, b WITH ROLLUP" ->
+        ("SELECT a, b, (((1 - cast((shiftright(grouping_id(), 1) & 1) as int)) * 1) + " +
+          "((1 - cast((shiftright(grouping_id(), 0) & 1) as int)) * 2)) AS `grouping__id` " +
+          "FROM t GROUP BY a, b WITH ROLLUP"),
+      "SELECT a, count(*) FROM t GROUP BY a, b GROUPING SETS ((a), (a, b), ( a ))" ->
+        "SELECT a, count(*) FROM t GROUP BY a, b GROUPING SETS ((a), (a, b))",
+      "FROM UNIQUEJOIN PRESERVE t1 a (a.key, upper(a.v)), t2 b (b.key, b.v) SELECT a.key, b.key" ->
+        ("SELECT a.key, b.key FROM (SELECT *, true AS __uj_p0 FROM t1) a FULL OUTER JOIN " +
+          "(SELECT *, true AS __uj_p1 FROM t2) b ON (a.key) = (b.key) AND " +
+          "CAST((upper(a.v)) AS DOUBLE) = CAST((b.v) AS DOUBLE) WHERE " +
+          "(__uj_p0 IS NOT NULL AND __uj_p1 IS NOT NULL) OR __uj_p0 IS NOT NULL"),
+      "SELECT 1.5, 'x 2.5', 3.0BD, \"4.5\", `c1.5`, 2 -- 2.5\nFROM t /* 7.5 */ WHERE y > .5" ->
+        "SELECT 1.5D, 'x 2.5', 3BD, \"4.5\", `c1.5`, 2 -- 2.5\nFROM t /* 7.5 */ WHERE y > .5D",
+      "SELECT max(c) mc, rank() OVER (ORDER BY mc) FROM t GROUP BY k" ->
+        "SELECT max(c) mc, rank() OVER (ORDER BY max(c)) FROM t GROUP BY k",
+      "SELECT rank() OVER (PARTITION BY a) FROM t" ->
+        "SELECT rank() OVER (PARTITION BY a ORDER BY 1) FROM t")
+    pins.foreach { case (in, want) => assert(HiveRewrites(in) == want, in) }
+    // TRANSFORM arguments are split at depth-0 commas and escaped one by one
+    val esc = (c: String) => s"replace(replace(replace(replace($c, '\\\\', '\\\\\\\\'), " +
+      "char(9), '\\\\t'), char(10), '\\\\n'), char(13), '\\\\r')"
+    val wrapped = HiveRewrites(
+      "SELECT TRANSFORM(a, concat(b, ',')) USING 'cat' AS (c, d) FROM t", true)
+    assert(wrapped.contains(s"TRANSFORM(${esc("a")}, ${esc("concat(b, ',')")})"), wrapped)
+  }
+
+  test("an apostrophe inside a block comment does not hide the depth-0 keyword after it") {
+    // a WHERE after UNIQUEJOIN's SELECT is untranslated: the statement
+    // must come back unchanged, not with the WHERE glued into the list
+    val in = "FROM UNIQUEJOIN t1 a (a.key), t2 b (b.key) SELECT a.key /* it's */ WHERE a.key > 1"
+    assert(HiveRewrites(in) == in)
+  }
 }

@@ -669,4 +669,29 @@ class HplsqlSpec extends AnyFunSuite {
         |END""".stripMargin)
     assert(out == Seq("nonzero"))
   }
+
+  // ---- offline dialect DDL (hplsql.DialectDdl) -------------------------
+
+  test("dialect DDL conversion keeps layout, types and table comment") {
+    import graft.hplsql.DialectDdl
+    assert(DialectDdl.convertScript(
+      "CREATE TABLE [dbo].[orders] (\n  [id] INT NOT NULL,\n  [name] NVARCHAR(MAX),\n" +
+        "  amt NUMERIC(10,2) DEFAULT (0),\n  CONSTRAINT pk PRIMARY KEY (id)\n) ON [PRIMARY]\nGO\n") ==
+      Seq("CREATE TABLE `orders` (\n  `id` INT,\n  `name` STRING,\n  amt DECIMAL(10,2)\n)"))
+    assert(DialectDdl.convertScript(
+      "CREATE TABLE shop.items (id INT(11) NOT NULL, label VARCHAR(20) DEFAULT 'n/a', " +
+        "ts DATETIME) ENGINE=InnoDB COMMENT='items';\n") ==
+      Seq("CREATE TABLE shop.items (id INT, label VARCHAR(20), ts TIMESTAMP) COMMENT 'items'"))
+    assert(DialectDdl.convertScript(
+      "CREATE MULTISET TABLE t1, NO LOG (a INT2, b VARCHAR2(10), c NUMBER(5)) PRIMARY INDEX (a);") ==
+      Seq("CREATE MULTISET TABLE t1 (a SMALLINT, b STRING, c DECIMAL(5))"))
+  }
+
+  test("dialect DDL: commas and semicolons inside string literals split nothing") {
+    import graft.hplsql.DialectDdl
+    assert(DialectDdl.convertScript(
+      "CREATE TABLE t (id INT COMMENT 'user id, not null', name VARCHAR2(10)) " +
+        "COMMENT='ids; names';") ==
+      Seq("CREATE TABLE t (id INT, name STRING) COMMENT 'ids; names'"))
+  }
 }

@@ -11,6 +11,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Dedup
+
 /** Pins both modes of [[graft.pin]]: executor-local without a checkpoint
   * dir, reliable files under the dir with one. */
 class PinSpec extends AnyFunSuite {
@@ -83,5 +85,36 @@ class PinSpec extends AnyFunSuite {
     assert(rdd.isCheckpointed)
     rdd.unpersist(blocking = true)
     intercept[SparkException](pinned.collect())
+  }
+
+  test("reliable mode: pin files last only as long as a reader can reach them") {
+    // Spark's ContextCleaner deletes a reliable checkpoint once its RDD is
+    // garbage collected, but only with this conf set (Session.configure)
+    assert(sc.getConf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L)).toDF("ida", "idb")
+    CheckpointDirShim.withCheckpointDir(sc) { dir =>
+      def rddDirs(f: java.io.File = new java.io.File(dir)): Set[String] =
+        Option(f.listFiles).toSeq.flatten.flatMap { c =>
+          if (c.isDirectory && c.getName.startsWith("rdd-")) Set(c.getName) else rddDirs(c)
+        }.toSet
+      /** Collects garbage until `done` holds; false after 60 s. */
+      def gcUntil(done: => Boolean): Boolean = {
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!done && System.nanoTime() < deadline) { System.gc(); Thread.sleep(200) }
+        done
+      }
+      var labels = Dedup.connectedComponents(edges)
+      val live = labels.queryExecution.logical.collect { case l: LogicalRDD => l.rdd }
+        .flatMap(_.getCheckpointFile).map(new org.apache.hadoop.fs.Path(_).getName).toSet
+      assert(labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L, 7L -> 7L, 8L -> 7L))
+      // every round pinned: the edge list, the labels and each round's
+      // own files, of which the result reads only the last
+      assert(live.nonEmpty && rddDirs().size > live.size, s"live $live, on disk ${rddDirs()}")
+      assert(gcUntil(rddDirs() == live), s"live $live, on disk ${rddDirs()}")
+      labels = null
+      assert(gcUntil(rddDirs().isEmpty), s"left on disk: ${rddDirs()}")
+    }
   }
 }

@@ -131,4 +131,22 @@ class QualifySpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
     assert(rows == std && rows.size == 7)
   }
+
+  test("rewrite text is pinned for nested blocks, comments and set operators") {
+    assert(QualifyRewrite.rewrite(
+      "SELECT a, (SELECT max(b) FROM u QUALIFY rank() OVER (ORDER BY b) = 1) AS m FROM t " +
+        "QUALIFY row_number() OVER (PARTITION BY a ORDER BY c) = 1 ORDER BY a LIMIT 3") ==
+      "SELECT * EXCEPT (__qualify) FROM (SELECT a, (SELECT * EXCEPT (__qualify) FROM " +
+        "(SELECT max(b) , (rank() OVER (ORDER BY b) = 1) AS __qualify FROM u ) __qualify_q " +
+        "WHERE __qualify ) AS m , (row_number() OVER (PARTITION BY a ORDER BY c) = 1) AS " +
+        "__qualify FROM t ) __qualify_q WHERE __qualify ORDER BY a LIMIT 3")
+    assert(QualifyRewrite.rewrite(
+      "SELECT DISTINCT a FROM t -- note\nQUALIFY sum(b) OVER (PARTITION BY a) > 1 " +
+        "UNION ALL SELECT 'QUALIFY' FROM u") ==
+      "SELECT DISTINCT * EXCEPT (__qualify) FROM (SELECT  a , (sum(b) OVER (PARTITION BY a) > 1) " +
+        "AS __qualify FROM t -- note\n) __qualify_q WHERE __qualify UNION ALL SELECT 'QUALIFY' FROM u")
+    assert(graft.plans.LimitCommaRewrite.rewrite(
+      "SELECT * FROM (SELECT a FROM t LIMIT 2, 3) s -- limit 1, 2\nLIMIT 4 , 5") ==
+      "SELECT * FROM (SELECT a FROM t LIMIT 3 OFFSET 2) s -- limit 1, 2\nLIMIT 5 OFFSET 4")
+  }
 }
