@@ -756,13 +756,18 @@ object QTestReplay {
         }
       }
     }
-    // restore the mirrored confs for the next file
+    resetFileConfs(spark)
+    FileResult(name, checked, skipped, nondet, failures.result().take(3))
+  }
+
+  /** Restore the confs a .q file may SET (mirrored reference confs and
+    * parser modes) so they never leak into the next file. */
+  private def resetFileConfs(spark: SparkSession): Unit = {
     spark.conf.set("graft.compat.int.ts.seconds", "false")
     spark.conf.set("graft.compat.script.id.var", "HIVE_SCRIPT_OPERATOR_ID")
     spark.conf.set("spark.sql.parser.quotedRegexColumnNames", "true")
     spark.conf.set("spark.sql.groupByOrdinal", "false")
     spark.conf.set("spark.sql.orderByOrdinal", "false")
-    FileResult(name, checked, skipped, nondet, failures.result().take(3))
   }
 
 
@@ -1412,12 +1417,7 @@ object QTestReplay {
       }
     } finally {
       dropOwned()
-      // per-file SETs of parser-mode confs must not leak
-      spark.conf.set("spark.sql.parser.quotedRegexColumnNames", "true")
-      spark.conf.set("spark.sql.groupByOrdinal", "false")
-      spark.conf.set("spark.sql.orderByOrdinal", "false")
-      spark.conf.set("graft.compat.int.ts.seconds", "false")
-      spark.conf.set("graft.compat.script.id.var", "HIVE_SCRIPT_OPERATOR_ID")
+      resetFileConfs(spark)
     }
     FileResult(name, checked, skipped, nondet, failures.result().take(3))
   }

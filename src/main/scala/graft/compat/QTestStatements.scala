@@ -759,15 +759,17 @@ private[compat] object QTestStatements {
     val upd = "(?is)^\\s*update\\s+([\\w.`]+)\\s+set\\s+(.*?)(?:\\s+where\\s+(.*?))?\\s*$".r
     def staged(table: String, postImage: String): Boolean = {
       val stage = "qtest_dml_stage"
-      val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      val mode = "spark.sql.sources.partitionOverwriteMode"
+      // None when the session never set it: restore by unsetting
+      val prev = if (spark.sessionState.conf.contains(mode)) Some(spark.conf.get(mode)) else None
       spark.sql(s"DROP TABLE IF EXISTS $stage")
       try {
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+        spark.conf.set(mode, "static")
         spark.sql(s"CREATE TABLE $stage USING parquet AS $postImage")
         spark.sql(s"INSERT OVERWRITE TABLE $table SELECT * FROM $stage")
         true
       } finally {
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        prev.fold(spark.conf.unset(mode))(spark.conf.set(mode, _))
         spark.sql(s"DROP TABLE IF EXISTS $stage"); ()
       }
     }

@@ -1,12 +1,10 @@
 package graft.functions
 
-import java.lang.reflect.Method
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's `reflect` / `java_method` semantics
@@ -36,39 +34,10 @@ final case class HiveReflect(children: Seq[Expression])
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression =
     copy(children = cs)
 
-  private def boxed(dt: DataType): Class[_] = dt match {
-    case StringType  => classOf[String]
-    case IntegerType => classOf[java.lang.Integer]
-    case LongType    => classOf[java.lang.Long]
-    case DoubleType  => classOf[java.lang.Double]
-    case FloatType   => classOf[java.lang.Float]
-    case ShortType   => classOf[java.lang.Short]
-    case ByteType    => classOf[java.lang.Byte]
-    case BooleanType => classOf[java.lang.Boolean]
-    case _: DecimalType => classOf[java.math.BigDecimal]
-    case TimestampType  => classOf[java.sql.Timestamp]
-    case DateType       => classOf[java.sql.Date]
-    case BinaryType     => classOf[Array[Byte]]
-    case NullType    => classOf[Object]
-    case other => throw new IllegalArgumentException(
-      s"reflect arguments must be primitive, got $other")
-  }
-
-  private def primitiveOf(c: Class[_]): Class[_] = c match {
-    case x if x == classOf[java.lang.Integer] => java.lang.Integer.TYPE
-    case x if x == classOf[java.lang.Long]    => java.lang.Long.TYPE
-    case x if x == classOf[java.lang.Double]  => java.lang.Double.TYPE
-    case x if x == classOf[java.lang.Float]   => java.lang.Float.TYPE
-    case x if x == classOf[java.lang.Short]   => java.lang.Short.TYPE
-    case x if x == classOf[java.lang.Byte]    => java.lang.Byte.TYPE
-    case x if x == classOf[java.lang.Boolean] => java.lang.Boolean.TYPE
-    case x => x
-  }
-
   // resolved lazily at first eval and cached while (class, method) names
   // repeat — the reference re-resolves only when either name changes
   @transient private var cachedKey: (String, String) = _
-  @transient private var cachedMethod: Method = _
+  @transient private var cachedCall: JavaBridge.Call = _
   @transient private var cachedInstance: AnyRef = _
 
   /** The reference's findMethod: first a String-returning method whose
@@ -76,40 +45,18 @@ final case class HiveReflect(children: Seq[Expression])
     * else the exact (name, primitive classes) lookup — here over a
     * SORTED candidate list so resolution is deterministic across JVMs. */
   private def resolve(className: String, methodName: String): Unit = {
-    val cls = Class.forName(className)
-    val argBoxed = children.drop(2).map(c => boxed(c.dataType))
-    val stringReturning = cls.getMethods
-      .filter { m =>
-        m.getName == methodName && m.getParameterCount == argBoxed.length &&
-          classOf[String].isAssignableFrom(m.getReturnType) &&
-          m.getParameterTypes.zip(argBoxed).forall { case (p, a) =>
-            p == primitiveOf(a) || p == a || p.isAssignableFrom(a)
-          }
-      }
-      .sortBy(_.getParameterTypes.map(_.getName).mkString(","))
-      .headOption
-    cachedMethod = stringReturning.getOrElse(
-      cls.getMethod(methodName, argBoxed.map(primitiveOf): _*))
+    val cls = JavaBridge.loadClass(className)
+    val argExprs = children.drop(2)
+    val argClasses = argExprs.map(c => JavaBridge.javaClass(c.dataType))
+    val m = JavaBridge.assignable(cls, methodName, argClasses)
+      .find(m => classOf[String].isAssignableFrom(m.getReturnType))
+      .getOrElse(cls.getMethod(methodName, argClasses.map(JavaBridge.primitiveOf): _*))
+    cachedCall = new JavaBridge.Call(m, argExprs)
     cachedInstance =
-      try cls.getDeclaredConstructor().newInstance().asInstanceOf[AnyRef]
+      try JavaBridge.newInstance(cls)
       catch { case _: Exception => null }
     cachedKey = (className, methodName)
   }
-
-  private def toJava(v: Any, dt: DataType): AnyRef =
-    if (v == null) null
-    else dt match {
-      case _: DecimalType =>
-        v.asInstanceOf[org.apache.spark.sql.types.Decimal].toJavaBigDecimal
-      case TimestampType =>
-        org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp(v.asInstanceOf[Long])
-      case DateType =>
-        org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaDate(v.asInstanceOf[Int])
-      case _ => v match {
-        case s: UTF8String => s.toString
-        case other         => other.asInstanceOf[AnyRef]
-      }
-    }
 
   override def eval(input: InternalRow): Any = {
     val clsName = children.head.eval(input)
@@ -117,9 +64,11 @@ final case class HiveReflect(children: Seq[Expression])
     if (clsName == null || mName == null) return null
     val key = (clsName.toString, mName.toString)
     if (cachedKey != key) resolve(key._1, key._2)
-    val args = children.drop(2).map(c => toJava(c.eval(input), c.dataType))
-    // the reference catches invocation failures and returns NULL
-    try UTF8String.fromString(String.valueOf(cachedMethod.invoke(cachedInstance, args: _*)))
+    val args = cachedCall.args(input)
+    // the reference catches invocation failures (a null into a primitive
+    // parameter among them) and returns NULL
+    if (args == null) return null
+    try UTF8String.fromString(String.valueOf(cachedCall.invoke(cachedInstance, args)))
     catch { case _: Exception => null }
   }
 }

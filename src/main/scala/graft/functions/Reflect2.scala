@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `reflect2(value, 'method', args...)` — instance-method reflection ON
@@ -33,7 +33,6 @@ case class Reflect2(children: Seq[Expression]) extends Expression with CodegenFa
   override def prettyName: String = "reflect2"
   override def nullable: Boolean = true
 
-  private def targetClass: Class[_] = javaClass(children.head.dataType)
   private def methodName: String =
     children(1).eval(null) match {
       case s: UTF8String => s.toString
@@ -41,126 +40,43 @@ case class Reflect2(children: Seq[Expression]) extends Expression with CodegenFa
         s"reflect2 method name must be a string literal, got $other")
     }
 
-  private def javaClass(dt: DataType): Class[_] = dt match {
-    case StringType  => classOf[String]
-    case IntegerType => classOf[java.lang.Integer]
-    case LongType    => classOf[java.lang.Long]
-    case DoubleType  => classOf[java.lang.Double]
-    case FloatType   => classOf[java.lang.Float]
-    case ShortType   => classOf[java.lang.Short]
-    case ByteType    => classOf[java.lang.Byte]
-    case BooleanType => classOf[java.lang.Boolean]
-    // the reference's reflect2 exposes timestamp/date values as their
-    // java.sql classes (GenericUDFReflect2 works over any primitive OI),
-    // so `reflect2(ts, 'getYear')` dispatches on java.sql.Timestamp
-    case TimestampType => classOf[java.sql.Timestamp]
-    case DateType      => classOf[java.sql.Date]
-    case other => throw new IllegalArgumentException(
-      s"reflect2 target must be a primitive/string column, got $other")
-  }
-
-  /** Unwrap a Catalyst internal value to the JVM value reflection sees. */
-  private def toJava(v: Any): AnyRef = v match {
-    case s: UTF8String => s.toString
-    case other         => other.asInstanceOf[AnyRef]
-  }
-
-  private def primitiveOf(c: Class[_]): Class[_] = c match {
-    case x if x == classOf[java.lang.Integer] => java.lang.Integer.TYPE
-    case x if x == classOf[java.lang.Long]    => java.lang.Long.TYPE
-    case x if x == classOf[java.lang.Double]  => java.lang.Double.TYPE
-    case x if x == classOf[java.lang.Float]   => java.lang.Float.TYPE
-    case x if x == classOf[java.lang.Short]   => java.lang.Short.TYPE
-    case x if x == classOf[java.lang.Byte]    => java.lang.Byte.TYPE
-    case x if x == classOf[java.lang.Boolean] => java.lang.Boolean.TYPE
-    case x => x
-  }
-
-  /** Resolved once (lazily at first use per task; deterministic). Tries
-    * boxed signatures first, then primitive — `String.substring(int)`
-    * resolves from an IntegerType arg. */
-  @transient private lazy val method: Method = {
-    val argClasses = children.drop(2).map(c => javaClass(c.dataType))
-    val cls = targetClass
-    def find(sig: Seq[Class[_]]): Option[Method] =
-      try Some(cls.getMethod(methodName, sig: _*)) catch { case _: NoSuchMethodException => None }
-    // last resort: assignability scan (the reference resolves through
-    // commons-lang MethodUtils.getMatchingAccessibleMethod, which is why
-    // `reflect2(s, 'equals', t)` finds equals(Object) for a String arg).
-    // Class.getMethods order is unspecified, so with several assignable
-    // overloads (Object vs a narrower type) pick the MOST SPECIFIC one,
-    // commons-lang style, from a deterministically sorted candidate list.
-    def findAssignable(): Option[Method] = {
-      val cands = cls.getMethods.filter { m =>
-        m.getName == methodName && m.getParameterCount == argClasses.length &&
-          m.getParameterTypes.zip(argClasses).forall { case (p, a) =>
-            p.isAssignableFrom(a) || p == primitiveOf(a)
-          }
-      }.sortBy(_.getParameterTypes.map(_.getName).mkString(","))
-      // a is at least as specific as b if every a-param is assignable to
-      // the matching b-param (b's params are the supertypes)
-      def atLeastAsSpecific(a: Method, b: Method): Boolean =
-        a.getParameterTypes.zip(b.getParameterTypes).forall { case (pa, pb) =>
-          pb.isAssignableFrom(pa) || pb == pa }
-      cands.reduceLeftOption((best, m) => if (atLeastAsSpecific(m, best)) m else best)
-    }
-    find(argClasses)
-      .orElse(find(argClasses.map(primitiveOf)))
-      .orElse(find(argClasses.map(c =>
-        if (c == classOf[String]) classOf[CharSequence] else c))) // String.replace
-      .orElse(findAssignable())
+  /** Resolved once (lazily at first use per task; deterministic): the
+    * exact boxed then primitive signature (`String.substring(int)` from
+    * an IntegerType arg), then String args as CharSequence
+    * (`String.replace`), then the most specific assignable overload. */
+  @transient private lazy val call: JavaBridge.Call = {
+    val argClasses = children.drop(2).map(c => JavaBridge.javaClass(c.dataType))
+    val cls = JavaBridge.javaClass(children.head.dataType)
+    // the reference resolves through commons-lang
+    // MethodUtils.getMatchingAccessibleMethod, which is why
+    // `reflect2(s, 'equals', t)` finds equals(Object) for a String arg;
+    // with several assignable overloads (Object vs a narrower type) it
+    // picks the MOST SPECIFIC one: a is at least as specific as b if
+    // every a-param is assignable to the matching b-param
+    def mostSpecific(cands: Seq[Method]): Option[Method] =
+      cands.reduceLeftOption { (best, m) =>
+        if (m.getParameterTypes.zip(best.getParameterTypes)
+            .forall { case (pm, pb) => pb.isAssignableFrom(pm) }) m else best
+      }
+    val m = JavaBridge.exact(cls, methodName, argClasses)
+      .orElse(JavaBridge.method(cls, methodName, argClasses.map(c =>
+        if (c == classOf[String]) classOf[CharSequence] else c)))
+      .orElse(mostSpecific(JavaBridge.assignable(cls, methodName, argClasses)))
       .getOrElse(throw new IllegalArgumentException(
         s"reflect2: no method $methodName(${argClasses.map(_.getSimpleName).mkString(",")}) " +
           s"on ${cls.getName}"))
+    new JavaBridge.Call(m, children.drop(2))
   }
+  @transient private lazy val targetToJava = JavaBridge.toJava(children.head.dataType)
 
-  override lazy val dataType: DataType = method.getReturnType match {
-    case c if c == classOf[String]            => StringType
-    case java.lang.Integer.TYPE               => IntegerType
-    case c if c == classOf[java.lang.Integer] => IntegerType
-    case java.lang.Long.TYPE                  => LongType
-    case c if c == classOf[java.lang.Long]    => LongType
-    case java.lang.Double.TYPE                => DoubleType
-    case c if c == classOf[java.lang.Double]  => DoubleType
-    case java.lang.Float.TYPE                 => FloatType
-    case java.lang.Boolean.TYPE               => BooleanType
-    case c if c == classOf[java.lang.Boolean] => BooleanType
-    case java.lang.Short.TYPE                 => ShortType
-    case java.lang.Byte.TYPE                  => ByteType
-    case java.lang.Character.TYPE             => StringType
-    case c if c == classOf[Array[Byte]]       => BinaryType // e.g. String.getBytes
-    case other => throw new IllegalArgumentException(
-      s"reflect2: unsupported return type ${other.getName} of $methodName")
-  }
-
-  /** Internal micros/days -> the java.sql values the method sees; both
-    * the target AND each argument need this (a DateType arg is an Int
-    * internally, never what the reflected method expects). */
-  private def toInvokable(v: Any, dt: DataType): AnyRef =
-    if (v == null) null
-    else dt match {
-      case TimestampType =>
-        org.apache.spark.sql.catalyst.util.DateTimeUtils
-          .toJavaTimestamp(v.asInstanceOf[Long])
-      case DateType =>
-        org.apache.spark.sql.catalyst.util.DateTimeUtils
-          .toJavaDate(v.asInstanceOf[Int])
-      case _ => toJava(v)
-    }
+  override lazy val dataType: DataType = JavaBridge.returnType(call.method, "reflect2")
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val target = children.head.eval(input)
     if (target == null) return null
-    val args = children.drop(2).map(c => toInvokable(c.eval(input), c.dataType))
-    if (args.contains(null)) return null
-    val javaTarget: AnyRef = toInvokable(target, children.head.dataType)
-    val result = method.invoke(javaTarget, args: _*)
-    result match {
-      case null       => null
-      case s: String  => UTF8String.fromString(s)
-      case c: java.lang.Character => UTF8String.fromString(c.toString)
-      case other      => other
-    }
+    val args = call.args(input)
+    if (args == null || args.contains(null)) return null // any null argument gives null
+    JavaBridge.toCatalyst(call.invoke(targetToJava(target), args))
   }
 
   override protected def withNewChildrenInternal(

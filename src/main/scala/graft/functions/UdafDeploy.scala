@@ -6,8 +6,7 @@ import java.lang.reflect.Method
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.DataType
 
 /** Compiled-UDAF deployment — the aggregate half of `CREATE FUNCTION
   * name AS 'class'` (reference: ql/src/java/org/apache/hadoop/hive/ql/
@@ -50,65 +49,20 @@ case class DeployedUdaf(funcName: String, className: String,
   override def prettyName: String = funcName
   override def nullable: Boolean = true
 
-  private def javaClass(dt: DataType): Class[_] = dt match {
-    case StringType  => classOf[String]
-    case IntegerType => classOf[java.lang.Integer]
-    case LongType    => classOf[java.lang.Long]
-    case DoubleType  => classOf[java.lang.Double]
-    case FloatType   => classOf[java.lang.Float]
-    case ShortType   => classOf[java.lang.Short]
-    case ByteType    => classOf[java.lang.Byte]
-    case BooleanType => classOf[java.lang.Boolean]
-    case BinaryType  => classOf[Array[Byte]]
-    case other => throw new IllegalArgumentException(
-      s"$funcName: unsupported argument type $other (compiled UDAFs take " +
-        "primitive/string/binary columns)")
-  }
-
-  private def primitiveOf(c: Class[_]): Class[_] = c match {
-    case x if x == classOf[java.lang.Integer] => java.lang.Integer.TYPE
-    case x if x == classOf[java.lang.Long]    => java.lang.Long.TYPE
-    case x if x == classOf[java.lang.Double]  => java.lang.Double.TYPE
-    case x if x == classOf[java.lang.Float]   => java.lang.Float.TYPE
-    case x if x == classOf[java.lang.Short]   => java.lang.Short.TYPE
-    case x if x == classOf[java.lang.Byte]    => java.lang.Byte.TYPE
-    case x if x == classOf[java.lang.Boolean] => java.lang.Boolean.TYPE
-    case x => x
-  }
-
   /** All five lifecycle methods resolved once (per task after
     * serialization — @transient, same pattern as [[DeployedUdf]]).
     * `merge` is looked up by `terminatePartial`'s declared return type,
     * the same pairing the reference's UDAFEvaluatorResolver enforces. */
-  @transient private lazy val bound: UdafDeploy.Bound = UdafDeploy.bind(
-    funcName, className, children.map(c => javaClass(c.dataType)),
-    children.map(c => primitiveOf(javaClass(c.dataType))))
+  @transient private lazy val bound: UdafDeploy.Bound =
+    UdafDeploy.bind(funcName, className, children)
 
-  override lazy val dataType: DataType =
-    UdafDeploy.sparkType(funcName, className, bound.terminate.getReturnType)
+  override lazy val dataType: DataType = JavaBridge.returnType(bound.terminate, funcName)
 
   override def createAggregationBuffer(): AnyRef = bound.fresh()
 
   override def update(buffer: AnyRef, input: InternalRow): AnyRef = {
-    // parameter primitiveness + numeric-widening converters are cached in
-    // Bound at bind time — getParameterTypes clones its array per call,
-    // which is per-row allocation on the aggregate hot path
-    val prim = bound.iteratePrimitive
-    val conv = bound.iterateConverters
-    val args = new Array[AnyRef](children.length)
-    var i = 0
-    while (i < children.length) {
-      val v = children(i).eval(input)
-      if (v == null) {
-        if (prim(i)) return buffer // bridge null skip
-        args(i) = null
-      } else args(i) = conv(i)((v match {
-        case s: UTF8String => s.toString
-        case other => other
-      }).asInstanceOf[AnyRef])
-      i += 1
-    }
-    bound.iterate.invoke(buffer, args: _*)
+    val args = bound.iterate.args(input)
+    if (args != null) bound.iterate.invoke(buffer, args) // else the bridge null skip
     buffer
   }
 
@@ -118,11 +72,7 @@ case class DeployedUdaf(funcName: String, className: String,
   }
 
   override def eval(buffer: AnyRef): Any =
-    bound.terminate.invoke(buffer) match {
-      case null => null
-      case s: String => UTF8String.fromString(s)
-      case other => other
-    }
+    JavaBridge.toCatalyst(bound.terminate.invoke(buffer))
 
   override def serialize(buffer: AnyRef): Array[Byte] = {
     val partial = bound.terminatePartial.invoke(buffer)
@@ -157,78 +107,14 @@ case class DeployedUdaf(funcName: String, className: String,
 object UdafDeploy {
 
   private[functions] final case class Bound(cls: Class[_], init: Option[Method],
-                                            iterate: Method, terminatePartial: Method,
+                                            iterate: JavaBridge.Call, terminatePartial: Method,
                                             merge: Method, terminate: Method) {
     def fresh(): AnyRef = {
-      val ev = cls.getDeclaredConstructor().newInstance().asInstanceOf[AnyRef]
+      val ev = JavaBridge.newInstance(cls)
       init.foreach(_.invoke(ev))
       ev
     }
-    // hot-path caches: getParameterTypes clones per call, and the
-    // widening converter is fixed once the method is chosen
-    val iteratePrimitive: Array[Boolean] = iterate.getParameterTypes.map(_.isPrimitive)
-    val iterateConverters: Array[AnyRef => AnyRef] =
-      iterate.getParameterTypes.map(numericConverter)
   }
-
-  /** Java's primitive widening chain, boxed spellings. A call-site type
-    * converts to a wider parameter type exactly as the reference's
-    * GenericUDAFBridge ConversionHelper coerces (int -> long -> double),
-    * never narrows. */
-  private val widenRank: Map[Class[_], Int] = Map(
-    classOf[java.lang.Byte] -> 0, classOf[java.lang.Short] -> 1,
-    classOf[java.lang.Integer] -> 2, classOf[java.lang.Long] -> 3,
-    classOf[java.lang.Float] -> 4, classOf[java.lang.Double] -> 5)
-
-  private def boxedOf(c: Class[_]): Class[_] = c match {
-    case java.lang.Byte.TYPE    => classOf[java.lang.Byte]
-    case java.lang.Short.TYPE   => classOf[java.lang.Short]
-    case java.lang.Integer.TYPE => classOf[java.lang.Integer]
-    case java.lang.Long.TYPE    => classOf[java.lang.Long]
-    case java.lang.Float.TYPE   => classOf[java.lang.Float]
-    case java.lang.Double.TYPE  => classOf[java.lang.Double]
-    case java.lang.Boolean.TYPE => classOf[java.lang.Boolean]
-    case other => other
-  }
-
-  private def widensTo(from: Class[_], to: Class[_]): Boolean = {
-    val t = boxedOf(to)
-    from == t || (widenRank.contains(from) && widenRank.contains(t) &&
-      widenRank(from) <= widenRank(t))
-  }
-
-  /** Boxed-value converter into the chosen parameter type (identity for
-    * non-numeric or already-exact arguments). */
-  private def numericConverter(target: Class[_]): AnyRef => AnyRef =
-    boxedOf(target) match {
-      case x if x == classOf[java.lang.Short] =>
-        v => v match { case n: java.lang.Number => java.lang.Short.valueOf(n.shortValue()); case o => o }
-      case x if x == classOf[java.lang.Integer] =>
-        v => v match { case n: java.lang.Number => java.lang.Integer.valueOf(n.intValue()); case o => o }
-      case x if x == classOf[java.lang.Long] =>
-        v => v match { case n: java.lang.Number => java.lang.Long.valueOf(n.longValue()); case o => o }
-      case x if x == classOf[java.lang.Float] =>
-        v => v match { case n: java.lang.Number => java.lang.Float.valueOf(n.floatValue()); case o => o }
-      case x if x == classOf[java.lang.Double] =>
-        v => v match { case n: java.lang.Number => java.lang.Double.valueOf(n.doubleValue()); case o => o }
-      case _ => identity[AnyRef]
-    }
-
-  /** Exact-signature miss fallback: the unique `name` overload every
-    * argument WIDENS to, smallest total widening first (deterministic
-    * when e.g. iterate(long) and iterate(double) both fit an int call
-    * site — the reference's resolver picks the closest match too,
-    * UDAFEvaluatorResolver getEvaluatorClass). */
-  private def findWidening(cls: Class[_], name: String,
-                           callSite: Seq[Class[_]]): Option[Method] =
-    cls.getMethods.filter(m => m.getName == name &&
-        m.getParameterCount == callSite.length &&
-        callSite.zip(m.getParameterTypes).forall { case (f, t) => widensTo(f, t) })
-      .sortBy { m =>
-        callSite.zip(m.getParameterTypes).map { case (f, t) =>
-          widenRank.getOrElse(boxedOf(t), 0) - widenRank.getOrElse(f, 0)
-        }.sum
-      }.headOption
 
   /** Does the class follow the UDAFEvaluator convention? (FunctionTask
     * inspects the deployed class the same way to pick scalar vs
@@ -239,50 +125,16 @@ object UdafDeploy {
   }
 
   private[functions] def bind(funcName: String, className: String,
-                              boxed: Seq[Class[_]], prims: Seq[Class[_]]): Bound = {
-    val cls = Class.forName(className, true,
-      Option(Thread.currentThread().getContextClassLoader)
-        .getOrElse(getClass.getClassLoader))
-    def find(name: String, sig: Seq[Class[_]]): Option[Method] =
-      try Some(cls.getMethod(name, sig: _*))
-      catch { case _: NoSuchMethodException => None }
-    val iterate = find("iterate", boxed).orElse(find("iterate", prims))
-      .orElse(findWidening(cls, "iterate", boxed))
-      .getOrElse(throw new IllegalArgumentException(
-        s"$funcName: $className has no iterate(" +
-          s"${boxed.map(_.getSimpleName).mkString(",")}) and no overload the " +
-          "arguments widen to (int->long->double) — the UDAF evaluator " +
-          "convention is iterate/terminatePartial/merge/terminate (exec/UDAF.java); " +
-          "cast the arguments explicitly if the evaluator narrows"))
-    val tp = find("terminatePartial", Nil).getOrElse(
-      throw new IllegalArgumentException(s"$funcName: $className has no terminatePartial()"))
-    val merge = find("merge", Seq(tp.getReturnType)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$funcName: $className has no merge(${tp.getReturnType.getSimpleName}) — " +
-          "merge must accept terminatePartial's return type"))
-    val terminate = find("terminate", Nil).getOrElse(
-      throw new IllegalArgumentException(s"$funcName: $className has no terminate()"))
-    Bound(cls, find("init", Nil), iterate, tp, merge, terminate)
-  }
-
-  private[functions] def sparkType(funcName: String, className: String,
-                                   c: Class[_]): DataType = c match {
-    case x if x == classOf[String]            => StringType
-    case java.lang.Integer.TYPE               => IntegerType
-    case x if x == classOf[java.lang.Integer] => IntegerType
-    case java.lang.Long.TYPE                  => LongType
-    case x if x == classOf[java.lang.Long]    => LongType
-    case java.lang.Double.TYPE                => DoubleType
-    case x if x == classOf[java.lang.Double]  => DoubleType
-    case java.lang.Float.TYPE                 => FloatType
-    case x if x == classOf[java.lang.Float]   => FloatType
-    case java.lang.Boolean.TYPE               => BooleanType
-    case x if x == classOf[java.lang.Boolean] => BooleanType
-    case java.lang.Short.TYPE                 => ShortType
-    case x if x == classOf[java.lang.Short]   => ShortType
-    case java.lang.Byte.TYPE                  => ByteType
-    case x if x == classOf[Array[Byte]]       => BinaryType
-    case other => throw new IllegalArgumentException(
-      s"$funcName: unsupported return type ${other.getName} of $className")
+                              children: Seq[Expression]): Bound = {
+    val cls = JavaBridge.loadClass(className)
+    def need(name: String, sig: Class[_]*): Method =
+      JavaBridge.method(cls, name, sig).getOrElse(throw new IllegalArgumentException(
+        s"$funcName: $className has no $name(${sig.map(_.getSimpleName).mkString(",")}) — " +
+          "the UDAF evaluator convention is iterate/terminatePartial/merge/terminate, " +
+          "merge taking terminatePartial's return type (exec/UDAF.java)"))
+    val tp = need("terminatePartial")
+    Bound(cls, JavaBridge.method(cls, "init", Nil),
+      JavaBridge.bind(cls, "iterate", children, funcName), tp, need("merge", tp.getReturnType),
+      need("terminate"))
   }
 }

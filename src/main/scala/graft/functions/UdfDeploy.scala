@@ -1,12 +1,11 @@
 package graft.functions
 
-import java.lang.reflect.{Method, Modifier}
+import java.lang.reflect.Modifier
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.DataType
 
 /** Compiled-UDF deployment — `CREATE [TEMPORARY] FUNCTION name AS
   * '<classname>'` (reference: ql/src/java/org/apache/hadoop/hive/ql/
@@ -18,7 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Spark-first: the deployed class becomes a Catalyst [[Expression]]
   * whose `evaluate` overload is RESOLVED ONCE from the call site's
-  * argument types (the reference does the same in
+  * argument types through [[JavaBridge]] — exact boxed, exact primitive,
+  * then the narrowest widening (the reference does the same in
   * GenericUDFBridge.initialize: method resolution happens at compile
   * time, only invoke() runs per row). The return Spark type comes from
   * the Java return type, so downstream operators are properly typed.
@@ -41,91 +41,20 @@ case class DeployedUdf(funcName: String, className: String,
   override def prettyName: String = funcName
   override def nullable: Boolean = true
 
-  private def javaClass(dt: DataType): Class[_] = dt match {
-    case StringType  => classOf[String]
-    case IntegerType => classOf[java.lang.Integer]
-    case LongType    => classOf[java.lang.Long]
-    case DoubleType  => classOf[java.lang.Double]
-    case FloatType   => classOf[java.lang.Float]
-    case ShortType   => classOf[java.lang.Short]
-    case ByteType    => classOf[java.lang.Byte]
-    case BooleanType => classOf[java.lang.Boolean]
-    case BinaryType  => classOf[Array[Byte]]
-    case other => throw new IllegalArgumentException(
-      s"$funcName: unsupported argument type $other (compiled UDFs take " +
-        "primitive/string/binary columns)")
-  }
-
-  private def primitiveOf(c: Class[_]): Class[_] = c match {
-    case x if x == classOf[java.lang.Integer] => java.lang.Integer.TYPE
-    case x if x == classOf[java.lang.Long]    => java.lang.Long.TYPE
-    case x if x == classOf[java.lang.Double]  => java.lang.Double.TYPE
-    case x if x == classOf[java.lang.Float]   => java.lang.Float.TYPE
-    case x if x == classOf[java.lang.Short]   => java.lang.Short.TYPE
-    case x if x == classOf[java.lang.Byte]    => java.lang.Byte.TYPE
-    case x if x == classOf[java.lang.Boolean] => java.lang.Boolean.TYPE
-    case x => x
-  }
-
   // one lazy val, not a destructured pair: pattern-destructured lazy
   // vals synthesize a NON-transient tuple field, which drags the
   // Method into task serialization
-  @transient private lazy val boundEval: (AnyRef, Method) = {
-    val cls = UdfDeploy.loadClass(className)
-    val argClasses = children.map(c => javaClass(c.dataType))
-    def find(sig: Seq[Class[_]]): Option[Method] =
-      try Some(cls.getMethod("evaluate", sig: _*))
-      catch { case _: NoSuchMethodException => None }
-    val m = find(argClasses).orElse(find(argClasses.map(primitiveOf)))
-      .getOrElse(throw new IllegalArgumentException(
-        s"$funcName: ${cls.getName} has no evaluate(" +
-          s"${argClasses.map(_.getSimpleName).mkString(",")}) — the UDF " +
-          "convention is one public evaluate method per overload"))
-    (cls.getDeclaredConstructor().newInstance().asInstanceOf[AnyRef], m)
+  @transient private lazy val bound: (AnyRef, JavaBridge.Call) = {
+    val cls = JavaBridge.loadClass(className)
+    (JavaBridge.newInstance(cls), JavaBridge.bind(cls, "evaluate", children, funcName))
   }
-  private def instance: AnyRef = boundEval._1
-  private def method: Method = boundEval._2
 
-  override lazy val dataType: DataType = method.getReturnType match {
-    case c if c == classOf[String]            => StringType
-    case java.lang.Integer.TYPE               => IntegerType
-    case c if c == classOf[java.lang.Integer] => IntegerType
-    case java.lang.Long.TYPE                  => LongType
-    case c if c == classOf[java.lang.Long]    => LongType
-    case java.lang.Double.TYPE                => DoubleType
-    case c if c == classOf[java.lang.Double]  => DoubleType
-    case java.lang.Float.TYPE                 => FloatType
-    case c if c == classOf[java.lang.Float]   => FloatType
-    case java.lang.Boolean.TYPE               => BooleanType
-    case c if c == classOf[java.lang.Boolean] => BooleanType
-    case java.lang.Short.TYPE                 => ShortType
-    case java.lang.Byte.TYPE                  => ByteType
-    case c if c == classOf[Array[Byte]]       => BinaryType
-    case other => throw new IllegalArgumentException(
-      s"$funcName: unsupported return type ${other.getName} of ${className}.evaluate")
-  }
+  override lazy val dataType: DataType = JavaBridge.returnType(bound._2.method, funcName)
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val m = method // force resolution before arg work
-    val params = m.getParameterTypes
-    val args = new Array[AnyRef](children.length)
-    var i = 0
-    while (i < children.length) {
-      val v = children(i).eval(input)
-      if (v == null) {
-        if (params(i).isPrimitive) return null // bridge null short-circuit
-        args(i) = null
-      } else args(i) = (v match {
-        case s: UTF8String => s.toString
-        case other => other
-      }).asInstanceOf[AnyRef]
-      i += 1
-    }
-    m.invoke(instance, args: _*) match {
-      case null => null
-      case s: String => UTF8String.fromString(s)
-      case other => other
-    }
+    val args = bound._2.args(input)
+    if (args == null) null // bridge null short-circuit
+    else JavaBridge.toCatalyst(bound._2.invoke(bound._1, args))
   }
 
   override protected def withNewChildrenInternal(
@@ -135,10 +64,8 @@ case class DeployedUdf(funcName: String, className: String,
 
 object UdfDeploy {
 
-  private[functions] def loadClass(className: String): Class[_] = {
-    val cls = Class.forName(className, true,
-      Option(Thread.currentThread().getContextClassLoader)
-        .getOrElse(getClass.getClassLoader))
+  private def loadClass(className: String): Class[_] = {
+    val cls = JavaBridge.loadClass(className)
     require(
       UdafDeploy.looksLikeUdaf(cls) || UdtfDeploy.looksLikeUdtf(cls) ||
         cls.getMethods.exists(m =>

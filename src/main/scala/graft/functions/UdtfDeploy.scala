@@ -43,45 +43,15 @@ case class DeployedUdtf(funcName: String, className: String,
 
   override def prettyName: String = funcName
 
-  private def javaClass(dt: DataType): Class[_] = dt match {
-    case StringType  => classOf[String]
-    case IntegerType => classOf[java.lang.Integer]
-    case LongType    => classOf[java.lang.Long]
-    case DoubleType  => classOf[java.lang.Double]
-    case FloatType   => classOf[java.lang.Float]
-    case ShortType   => classOf[java.lang.Short]
-    case ByteType    => classOf[java.lang.Byte]
-    case BooleanType => classOf[java.lang.Boolean]
-    case BinaryType  => classOf[Array[Byte]]
-    case other => throw new IllegalArgumentException(
-      s"$funcName: unsupported argument type $other (compiled UDTFs take " +
-        "primitive/string/binary columns)")
-  }
-
-  private def primitiveOf(c: Class[_]): Class[_] = c match {
-    case x if x == classOf[java.lang.Integer] => java.lang.Integer.TYPE
-    case x if x == classOf[java.lang.Long]    => java.lang.Long.TYPE
-    case x if x == classOf[java.lang.Double]  => java.lang.Double.TYPE
-    case x if x == classOf[java.lang.Float]   => java.lang.Float.TYPE
-    case x if x == classOf[java.lang.Short]   => java.lang.Short.TYPE
-    case x if x == classOf[java.lang.Byte]    => java.lang.Byte.TYPE
-    case x if x == classOf[java.lang.Boolean] => java.lang.Boolean.TYPE
-    case x => x
-  }
-
-  @transient private lazy val bound: UdtfDeploy.Bound = UdtfDeploy.bind(
-    funcName, className, children.map(c => javaClass(c.dataType)),
-    children.map(c => primitiveOf(javaClass(c.dataType))))
+  @transient private lazy val bound: UdtfDeploy.Bound =
+    UdtfDeploy.bind(funcName, className, children)
 
   override lazy val elementSchema: StructType = {
     // schema comes from initialize() on a throwaway instance at analysis
     // time (the reference calls initialize exactly once per query too)
-    val cls = Class.forName(className, true,
-      Option(Thread.currentThread().getContextClassLoader)
-        .getOrElse(getClass.getClassLoader))
-    val m = cls.getMethod("initialize")
-    val ddl = m.invoke(cls.getDeclaredConstructor().newInstance()).asInstanceOf[String]
-    StructType.fromDDL(ddl)
+    val cls = JavaBridge.loadClass(className)
+    StructType.fromDDL(
+      cls.getMethod("initialize").invoke(JavaBridge.newInstance(cls)).asInstanceOf[String])
   }
 
   private def toCatalyst(v: AnyRef, dt: DataType, field: String): Any = (v, dt) match {
@@ -117,21 +87,9 @@ case class DeployedUdtf(funcName: String, className: String,
   }
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val prim = bound.processPrimitive
-    val args = new Array[AnyRef](children.length)
-    var i = 0
-    while (i < children.length) {
-      val v = children(i).eval(input)
-      if (v == null) {
-        if (prim(i)) return Nil // bridge null skip
-        args(i) = null
-      } else args(i) = (v match {
-        case s: UTF8String => s.toString
-        case other => other
-      }).asInstanceOf[AnyRef]
-      i += 1
-    }
-    toRows(bound.process.invoke(bound.instance, args: _*))
+    val args = bound.process.args(input)
+    if (args == null) Nil // bridge null skip
+    else toRows(bound.process.invoke(bound.instance, args))
   }
 
   /** GenericUDTF.close(): trailing rows once per input partition. */
@@ -145,12 +103,8 @@ case class DeployedUdtf(funcName: String, className: String,
 
 object UdtfDeploy {
 
-  private[functions] final case class Bound(instance: AnyRef, process: Method,
-                                            close: Option[Method]) {
-    // cached: getParameterTypes clones its array per call — per-row
-    // allocation on the generator hot path
-    val processPrimitive: Array[Boolean] = process.getParameterTypes.map(_.isPrimitive)
-  }
+  private[functions] final case class Bound(instance: AnyRef, process: JavaBridge.Call,
+                                            close: Option[Method])
 
   /** GenericUDTF shape: initialize() declaring a schema + process(). */
   private[functions] def looksLikeUdtf(cls: Class[_]): Boolean =
@@ -159,19 +113,9 @@ object UdtfDeploy {
       cls.getMethods.exists(_.getName == "process")
 
   private[functions] def bind(funcName: String, className: String,
-                              boxed: Seq[Class[_]], prims: Seq[Class[_]]): Bound = {
-    val cls = Class.forName(className, true,
-      Option(Thread.currentThread().getContextClassLoader)
-        .getOrElse(getClass.getClassLoader))
-    def find(name: String, sig: Seq[Class[_]]): Option[Method] =
-      try Some(cls.getMethod(name, sig: _*))
-      catch { case _: NoSuchMethodException => None }
-    val process = find("process", boxed).orElse(find("process", prims))
-      .getOrElse(throw new IllegalArgumentException(
-        s"$funcName: $className has no process(" +
-          s"${boxed.map(_.getSimpleName).mkString(",")}) — the UDTF convention " +
-          "is initialize()/process(args)/close() (GenericUDTF.java)"))
-    val close = find("close", Nil)
-    Bound(cls.getDeclaredConstructor().newInstance().asInstanceOf[AnyRef], process, close)
+                              children: Seq[Expression]): Bound = {
+    val cls = JavaBridge.loadClass(className)
+    Bound(JavaBridge.newInstance(cls), JavaBridge.bind(cls, "process", children, funcName),
+      JavaBridge.method(cls, "close", Nil))
   }
 }

@@ -6,6 +6,31 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{FunctionDdl, UdfDeploy}
 import graft.hplsql.Hplsql
 
+/** Test-only deployable classes: boxed Short/Byte returns, which the
+  * Java-to-SQL return map must cover for every deploy kind alike. */
+class BoxedShortUdf {
+  def evaluate(a: java.lang.Integer): java.lang.Short =
+    if (a == null) null else java.lang.Short.valueOf(a.shortValue)
+}
+
+class BoxedByteUdf {
+  def evaluate(a: java.lang.Integer): java.lang.Byte =
+    if (a == null) null else java.lang.Byte.valueOf(a.byteValue)
+}
+
+/** Max of int inputs, terminated as a boxed Byte. */
+class ByteMaxUdaf {
+  private var cur: java.lang.Integer = null
+  def init(): Unit = { cur = null }
+  def iterate(v: java.lang.Integer): Boolean = {
+    if (v != null && (cur == null || v > cur)) cur = v; true
+  }
+  def terminatePartial(): java.lang.Integer = cur
+  def merge(p: java.lang.Integer): Boolean = iterate(p)
+  def terminate(): java.lang.Byte =
+    if (cur == null) null else java.lang.Byte.valueOf(cur.byteValue)
+}
+
 /** Compiled-UDF deployment (functions/UdfDeploy — FunctionTask.java /
   * exec/UDF.java evaluate-convention analog). Pins: DDL deploys and
   * drops; overload resolution by argument types; null short-circuit for
@@ -132,5 +157,34 @@ class UdfDeploySpec extends AnyFunSuite {
         |END;
         |PRINT twice(21);""".stripMargin).output
     assert(out.trim == "42")
+  }
+
+  test("boxed Short/Byte returns type the column, for UDFs and UDAFs alike") {
+    UdfDeploy.create(spark, "t_short", "graft.BoxedShortUdf")
+    UdfDeploy.create(spark, "t_byte", "graft.BoxedByteUdf")
+    UdfDeploy.create(spark, "t_bmax", "graft.ByteMaxUdaf")
+    try {
+      val df = spark.sql("SELECT t_short(7) AS s, t_byte(9) AS b, t_short(cast(null as int)) AS n")
+      assert(df.schema("s").dataType.typeName == "short")
+      assert(df.schema("b").dataType.typeName == "byte")
+      val r = df.collect()(0)
+      assert(r.getShort(0) == 7.toShort && r.getByte(1) == 9.toByte && r.isNullAt(2))
+      val agg = spark.range(0, 100).selectExpr("cast(id % 50 as int) AS v").repartition(4)
+        .selectExpr("t_bmax(v) AS m")
+      assert(agg.schema("m").dataType.typeName == "byte")
+      assert(agg.collect()(0).getByte(0) == 49.toByte)
+    } finally {
+      UdfDeploy.drop(spark, "t_short"); UdfDeploy.drop(spark, "t_byte")
+      UdfDeploy.drop(spark, "t_bmax")
+    }
+  }
+
+  test("scalar evaluate lookup widens int to double when no exact overload fits") {
+    UdfDeploy.create(spark, "t_add3", "graft.examples.ExampleAddUdf")
+    try {
+      val df = spark.sql("SELECT t_add3(1, cast(2.25 as double)) AS w")
+      assert(df.schema("w").dataType.typeName == "double") // evaluate(Double, Double)
+      assert(df.collect()(0).getDouble(0) == 3.25)
+    } finally UdfDeploy.drop(spark, "t_add3")
   }
 }

@@ -62,4 +62,18 @@ class CompatTextSpec extends AnyFunSuite {
       assert(rows == Seq(("a,b", 1), ("y", 5)))
     } finally { s.sql("DROP TABLE IF EXISTS compat_dml_t"); () }
   }
+
+  test("a compat UPDATE leaves an unset partition overwrite mode as it found it") {
+    val s = spark.newSession()
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    assert(!s.sessionState.conf.contains(key))
+    val before = s.conf.get(key)
+    s.sql("DROP TABLE IF EXISTS compat_dml_mode_t")
+    s.sql("CREATE TABLE compat_dml_mode_t (n INT) USING parquet")
+    try {
+      s.sql("INSERT INTO compat_dml_mode_t VALUES (1), (2)")
+      assert(QTestStatements.runDml(s, "UPDATE compat_dml_mode_t SET n = 3 WHERE n = 1"))
+      assert(s.conf.get(key) == before)
+    } finally { s.sql("DROP TABLE IF EXISTS compat_dml_mode_t"); () }
+  }
 }
