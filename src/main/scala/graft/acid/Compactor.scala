@@ -90,9 +90,9 @@ object Compactor {
   /** The daemon: run [[scanWarehouse]] every `intervalMs` on a
     * background thread until the returned handle is closed. Exactly one
     * per warehouse: a second start() against the same warehouse throws
-    * while the first is alive (exclusive-create marker, reclaimed on
-    * close and by a stale-age bound so a crashed daemon's successor can
-    * start). */
+    * while the first is alive (an atomically created marker, taken and
+    * stale-reclaimed like a writer lock file, released on close, so a
+    * crashed daemon's successor can start). */
   def start(spark: SparkSession, warehouseDir: String, intervalMs: Long,
             maxDeltas: Int = 10,
             retainVersions: Int = Int.MaxValue): AutoCloseable = {
@@ -101,16 +101,11 @@ object Compactor {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(root)
     val marker = new Path(root, "_compactor_daemon")
-    // stale reclaim: a marker older than 10 intervals belongs to a dead
-    // daemon (a live one re-touches it every pass)
-    if (fs.exists(marker) &&
-        System.currentTimeMillis() - fs.getFileStatus(marker).getModificationTime >
-          10 * math.max(intervalMs, 1000L)) {
-      fs.delete(marker, false)
-    }
     CopyOnWrite.assertLockCapable(fs)
-    val created = scala.util.Try(fs.create(marker, false).close()).isSuccess
-    if (!created)
+    // the seat is a lock file: a marker older than 10 intervals belongs to
+    // a dead daemon (a live one re-touches it every pass)
+    CopyOnWrite.reclaimIfStale(fs, marker, 10 * math.max(intervalMs, 1000L))
+    if (!CopyOnWrite.tryAcquire(fs, marker))
       throw new IllegalStateException(
         s"a compactor daemon already runs for $warehouseDir " +
           "(exactly one per warehouse — Initiator.java:57)")

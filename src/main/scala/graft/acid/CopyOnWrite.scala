@@ -1,6 +1,10 @@
 package graft.acid
 
-import org.apache.hadoop.fs.Path
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.regex.Matcher
+
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,20 +36,6 @@ object CopyOnWrite {
   private[graft] val LockWaitMs = 60000L
   private[graft] val StaleLockMs = 10L * 60 * 1000
 
-  /** Directory-level writer lock — the reference's table-level X lock
-    * (lockmgr/DbTxnManager.java:58, ZooKeeperHiveLockManager) reduced to
-    * the COW case: writers serialize, readers never block (they see the
-    * old or new table via the staged swap, never a mix). The lock is an
-    * atomically-created sidecar file (`fs.create(overwrite=false)` —
-    * atomic on HDFS and local); it is acquired BEFORE the table read so a
-    * serialized writer observes its predecessor's result rather than
-    * computing from a stale snapshot (lost update). A lock older than
-    * [[StaleLockMs]] is presumed crashed and reclaimed. */
-  /** One attempt to atomically create the lock file. HDFS `create(f,
-    * overwrite=false)` is atomic server-side, but RawLocalFileSystem's is
-    * check-then-act — two local writers can both pass the exists check —
-    * so the local scheme goes through `File.createNewFile` (O_CREAT|
-    * O_EXCL, atomic at the kernel). */
   /** Schemes whose `create(overwrite=false)` is client-side
     * check-then-act, NOT an atomic exclusive create — the object
     * stores. The sidecar lock cannot exclude two concurrent writers
@@ -59,7 +49,7 @@ object CopyOnWrite {
   private[graft] val NonAtomicCreateSchemes =
     Set("s3", "s3a", "s3n", "gs", "wasb", "wasbs", "abfs", "abfss", "oss", "cos", "swift")
 
-  private[graft] def assertLockCapable(fs: org.apache.hadoop.fs.FileSystem): Unit =
+  private[graft] def assertLockCapable(fs: FileSystem): Unit =
     if (NonAtomicCreateSchemes(fs.getScheme) &&
         !fs.getConf.getBoolean("graft.lock.allowNonAtomicCreate", false))
       throw new UnsupportedOperationException(
@@ -67,15 +57,19 @@ object CopyOnWrite {
         "provide; supply external writer mutual-exclusion and set " +
         "graft.lock.allowNonAtomicCreate=true to proceed")
 
-  private[acid] def tryAcquire(fs: org.apache.hadoop.fs.FileSystem,
-                               lock: Path): Boolean = {
+  /** One attempt to atomically create the lock file. HDFS `create(f,
+    * overwrite=false)` is atomic server-side, but RawLocalFileSystem's is
+    * check-then-act — two local writers can both pass the exists check —
+    * so the local scheme goes through `File.createNewFile` (O_CREAT|
+    * O_EXCL, atomic at the kernel). */
+  private[acid] def tryAcquire(fs: FileSystem, lock: Path): Boolean = {
     val tag = s"${java.lang.management.ManagementFactory.getRuntimeMXBean.getName} " +
       s"${System.currentTimeMillis()}\n"
     if (fs.getScheme == "file") {
       val f = new java.io.File(lock.toUri.getPath)
       f.getParentFile.mkdirs()
       if (!f.createNewFile()) false
-      else { java.nio.file.Files.writeString(f.toPath, tag); true }
+      else { Files.writeString(f.toPath, tag); true }
     } else {
       try {
         val out = fs.create(lock, false)
@@ -84,31 +78,29 @@ object CopyOnWrite {
     }
   }
 
-  private[graft] def acquireLock(fs: org.apache.hadoop.fs.FileSystem, lock: Path,
-                                what: String): Unit = {
+  /** Remove `lock` if it is older than `staleMs` (its holder crashed).
+    * Rename-then-verify, not check-then-delete: a plain delete raced a
+    * competitor that freed and retook the lock between our status read
+    * and the delete — deleting ITS fresh lock and letting two holders
+    * run. Renaming to a unique claim name is atomic (one claimer wins);
+    * the winner re-verifies staleness on the claimed file and RESTORES
+    * it if it turns out to be a live lock it stole in that window. */
+  private[graft] def reclaimIfStale(fs: FileSystem, lock: Path, staleMs: Long): Unit =
+    try {
+      def stale(p: Path) =
+        System.currentTimeMillis() - fs.getFileStatus(p).getModificationTime > staleMs
+      lazy val claim = new Path(s"$lock.reclaim-${java.util.UUID.randomUUID().toString.take(8)}")
+      if (stale(lock) && fs.rename(lock, claim)) {
+        if (stale(claim)) fs.delete(claim, false) // truly abandoned: reclaimed
+        else fs.rename(claim, lock) // stole a live lock: put it back
+      }
+    } catch { case _: java.io.FileNotFoundException => () } // raced free
+
+  private[graft] def acquireLock(fs: FileSystem, lock: Path, what: String): Unit = {
     assertLockCapable(fs)
     val deadline = System.nanoTime() + LockWaitMs * 1000000L
     while (!tryAcquire(fs, lock)) {
-      // Stale reclaim via atomic RENAME-then-verify, not check-then-delete:
-      // a plain delete raced a competitor that freed+retook the lock
-      // between our status read and the delete — deleting ITS fresh lock
-      // and letting two writers run. Renaming to a unique claim name is
-      // atomic (one claimer wins); the winner re-verifies staleness on
-      // the claimed file and RESTORES it if it turns out to be a live
-      // lock it stole in that window.
-      try {
-        val st = fs.getFileStatus(lock)
-        if (System.currentTimeMillis() - st.getModificationTime > StaleLockMs) {
-          val claim = new Path(lock.toString +
-            s".reclaim-${java.util.UUID.randomUUID().toString.take(8)}")
-          if (fs.rename(lock, claim)) {
-            val st2 = fs.getFileStatus(claim)
-            if (System.currentTimeMillis() - st2.getModificationTime > StaleLockMs)
-              fs.delete(claim, false) // truly abandoned: reclaimed
-            else fs.rename(claim, lock) // stole a live lock: put it back
-          }
-        }
-      } catch { case _: java.io.FileNotFoundException => () } // raced free
+      reclaimIfStale(fs, lock, StaleLockMs)
       if (System.nanoTime() > deadline)
         throw new java.io.IOException(
           s"$what writer lock busy after ${LockWaitMs}ms: $lock")
@@ -116,46 +108,126 @@ object CopyOnWrite {
     }
   }
 
-  private[graft] def withTableLock[T](spark: SparkSession, path: String)(body: => T): T =
-    spark.conf.getOption("graft.txn.dir") match {
-      case Some(txnDir) =>
-        // shared lock-service mode (DbTxnManager/TxnHandler analog): the
-        // writer's X lock goes through the cross-process queue in
-        // `txnDir`, so COW/versioned writers coordinate with every other
-        // client of that service, not just writers of this table path
-        val tm = TxnManager(spark, txnDir)
-        val h = tm.acquireLocks(Seq(TxnManager.LockComponent(
-          TxnManager.Exclusive, "default", Some(new Path(path).getName))))
-        val hb = tm.startHeartbeater(30000L)
-        try body finally { hb.close(); tm.unlock(h.extLockId) }
-      case None =>
-        val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val lock = new Path(path + ".cow_lock")
-        acquireLock(fs, lock, "COW")
-        try body finally fs.delete(lock, false)
-    }
+  // qualified table paths whose writer lock the current thread holds
+  private val heldLocks = ThreadLocal.withInitial(() => scala.collection.mutable.Set[String]())
 
-  /** The shared staged-swap protocol: clear staging/backup, let `write`
-    * produce the staging dir, then current -> backup, staging -> current,
-    * drop backup — rolling back the first rename if the promotion fails.
-    * Readers during the window see the old or new table, never a mix.
-    * Returns false without swapping when `write` reports a no-op. */
+  /** The writer lock every table-mutating path takes — the reference's
+    * table-level X lock (lockmgr/DbTxnManager.java:58,
+    * ZooKeeperHiveLockManager) reduced to the COW case: writers
+    * serialize, readers never block (they see the old or new table via
+    * the staged swap, never a mix). It is acquired BEFORE the table read
+    * so a serialized writer observes its predecessor's result rather
+    * than computing from a stale snapshot (lost update).
+    *
+    * With `graft.txn.dir` set it is an exclusive lock in that shared
+    * [[TxnManager]] queue; otherwise it is an atomically created
+    * `<path>.cow_lock` sidecar ([[tryAcquire]]), reclaimed once older
+    * than [[StaleLockMs]]. Reentrant per thread: a nested call on a path
+    * this thread already holds runs its body directly, so a locked
+    * operation may call another locked operation on the same table. */
+  private[graft] def withTableLock[T](spark: SparkSession, path: String)(body: => T): T = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = fs.makeQualified(new Path(path)).toString
+    val held = heldLocks.get()
+    if (held(key)) body
+    else {
+      val release: () => Unit = spark.conf.getOption("graft.txn.dir") match {
+        case Some(txnDir) =>
+          // shared lock-service mode (DbTxnManager/TxnHandler analog):
+          // the writer queues with every other client of that service,
+          // not just writers of this table path
+          val tm = TxnManager(spark, txnDir)
+          val h = tm.acquireLocks(Seq(TxnManager.LockComponent(
+            TxnManager.Exclusive, "default", Some(new Path(path).getName))))
+          val hb = tm.startHeartbeater(30000L)
+          () => { hb.close(); tm.unlock(h.extLockId) }
+        case None =>
+          val lock = new Path(path + ".cow_lock")
+          acquireLock(fs, lock, "COW")
+          () => fs.delete(lock, false)
+      }
+      held += key
+      try body finally { held -= key; release() }
+    }
+  }
+
+  /** Replace the small file `path` with `body` (UTF-8) atomically: a
+    * reader sees the old or the new content, never a missing or partial
+    * file, and a crash leaves the old file intact. The body goes to a
+    * unique hidden temp sibling that one rename-over moves into place.
+    * Hadoop's local rename-with-OVERWRITE deletes the target first, so
+    * the local scheme uses the kernel's atomic rename(2) instead and
+    * writes no checksum sidecar (a stale one is dropped first, or a
+    * checksummed reader would reject the new bytes). */
+  private[graft] def publish(fs: FileSystem, path: Path, body: String): Unit = {
+    val tmpName = s".${path.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp"
+    val bytes = body.getBytes(UTF_8)
+    if (fs.getScheme == "file") {
+      val dst = Paths.get(path.toUri.getPath)
+      Files.createDirectories(dst.getParent)
+      val tmp = Files.write(dst.resolveSibling(tmpName), bytes)
+      Files.deleteIfExists(dst.resolveSibling(s".${path.getName}.crc"))
+      Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
+    } else {
+      val tmp = new Path(path.getParent, tmpName)
+      val out = fs.create(tmp, true)
+      try out.write(bytes) finally out.close()
+      FileContext.getFileContext(tmp.toUri, fs.getConf).rename(tmp, path, Options.Rename.OVERWRITE)
+    }
+  }
+
+  /** The whole of a small file, as UTF-8. */
+  private[graft] def readSmall(fs: FileSystem, path: Path): String = {
+    val in = fs.open(path)
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
+  }
+
+  /** One JSON string literal, for the engine's JSON sidecars. */
+  private[graft] def jsonStr(s: String): String = s.iterator.map {
+    case c @ ('"' | '\\') => s"\\$c"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
+
+  /** The body of a JSON string literal back to its text, in one pass. */
+  private[graft] def jsonUnescape(s: String): String =
+    """\\(?:u([0-9a-fA-F]{4})|(.))""".r.replaceAllIn(s, m => Matcher.quoteReplacement(
+      Option(m.group(1)).map(h => Integer.parseInt(h, 16).toChar.toString).getOrElse(
+        Map("n" -> "\n", "r" -> "\r", "t" -> "\t", "b" -> "\b", "f" -> "\f")
+          .getOrElse(m.group(2), m.group(2)))))
+
+  /** The top-level string, integer and null fields of a flat JSON
+    * object, strings unescaped. */
+  private[graft] def jsonFields(body: String): Map[String, Option[String]] =
+    """"(\w+)":(?:"((?:[^"\\]|\\.)*)"|(\d+)|null)""".r.findAllMatchIn(body).map { m =>
+      m.group(1) -> Option(m.group(2)).map(jsonUnescape).orElse(Option(m.group(3)))
+    }.toMap
+
+  /** The shared staged-swap protocol, under `path`'s writer lock (taken
+    * here, or re-entered when the caller holds it): clear staging/backup,
+    * let `write` produce the staging dir, then current -> backup,
+    * staging -> current, drop backup — rolling back the first rename if
+    * the promotion fails. Readers during the window see the old or new
+    * table, never a mix. Returns false without swapping when `write`
+    * reports a no-op. */
   private[graft] def stagedSwap(spark: SparkSession, path: String)
-                                (write: Path => Boolean): Boolean = {
+                                (write: Path => Boolean): Boolean = withTableLock(spark, path) {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = new Path(path + ".cow_staging")
     val backup = new Path(path + ".cow_backup")
     fs.delete(staging, true)
     fs.delete(backup, true)
-    if (!write(staging)) { fs.delete(staging, true); return false }
-    if (!fs.rename(new Path(path), backup))
-      throw new java.io.IOException(s"COW swap failed: cannot move $path aside")
-    if (!fs.rename(staging, new Path(path))) {
-      fs.rename(backup, new Path(path)) // roll back
-      throw new java.io.IOException(s"COW swap failed: cannot promote staging for $path")
+    if (!write(staging)) { fs.delete(staging, true); false }
+    else {
+      if (!fs.rename(new Path(path), backup))
+        throw new java.io.IOException(s"COW swap failed: cannot move $path aside")
+      if (!fs.rename(staging, new Path(path))) {
+        fs.rename(backup, new Path(path)) // roll back
+        throw new java.io.IOException(s"COW swap failed: cannot promote staging for $path")
+      }
+      fs.delete(backup, true)
+      true
     }
-    fs.delete(backup, true)
-    true
   }
 
   /** UPDATE path SET assignments WHERE cond. Returns affected rows.

@@ -193,14 +193,12 @@ final class TxnManager(spark: SparkSession, dir: String, user: String) {
   // ---- lock queue -------------------------------------------------------
 
   private def compToJson(c: LockComponent, txnId: Long, queryId: String): String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    val q = CopyOnWrite.jsonStr _
     val t = c.table.map(q).getOrElse("null")
     val p = c.partition.map(q).getOrElse("null")
     s"""{"mode":${q(c.mode.name)},"db":${q(c.db)},"table":$t,"partition":$p,""" +
       s""""txn":$txnId,"user":${q(user)},"query":${q(queryId)}}"""
   }
-
-  private val JsonField = """"(\w+)":(?:"((?:[^"\\]|\\.)*)"|(\d+)|null)""".r
 
   private def parseLockFile(f: FileSystem, p: Path): Option[LockRow] = {
     val name = p.getName
@@ -208,13 +206,7 @@ final class TxnManager(spark: SparkSession, dir: String, user: String) {
       case Array(ext, int, st) if ext.forall(_.isDigit) && int.forall(_.isDigit) =>
         val state = if (st == "acquired") Acquired else Waiting
         try {
-          val in = f.open(p)
-          val body = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-            finally in.close()
-          val kv = JsonField.findAllMatchIn(body).map { m =>
-            m.group(1) -> Option(m.group(2)).map(_.replace("\\\"", "\"").replace("\\\\", "\\"))
-              .orElse(Option(m.group(3)))
-          }.toMap
+          val kv = CopyOnWrite.jsonFields(CopyOnWrite.readSmall(f, p))
           val comp = LockComponent(
             mode(kv("mode").get), kv("db").get,
             kv.getOrElse("table", None), kv.getOrElse("partition", None))
@@ -253,7 +245,7 @@ final class TxnManager(spark: SparkSession, dir: String, user: String) {
       val extId = allocate(lockIdsDir, fmtId)
       val f = fs
       components.zipWithIndex.foreach { case (c, i) =>
-        writeAtomic(f, lockFileName(extId, i, Waiting),
+        CopyOnWrite.publish(f, lockFileName(extId, i, Waiting),
           compToJson(c, txnId, queryId))
       }
       ownLocks.add(extId)
@@ -263,15 +255,6 @@ final class TxnManager(spark: SparkSession, dir: String, user: String) {
 
   private def lockFileName(extId: Long, intId: Int, state: LockState) =
     new Path(locksDir, s"${fmtId(extId)}.${f"$intId%03d"}.${state.name.toLowerCase}")
-
-  private def writeAtomic(f: FileSystem, dest: Path, body: String): Unit = {
-    val tmp = new Path(dest.getParent, s".tmp_${dest.getName}_${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = f.create(tmp, true)
-    out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    if (!f.rename(tmp, dest)) { f.delete(tmp, false)
-      throw new LockException(s"cannot enqueue lock file $dest") }
-  }
 
   /** Re-run the grant check for a queued request — the poll the reference
     * client does via checkLock(extLockId). */
@@ -564,14 +547,12 @@ object CompactionHistory {
         val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
         f.mkdirs(cdir(dir))
         val worker = java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-        def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+        val q = CopyOnWrite.jsonStr _
         val body = s"""{"table":${q(table)},"partition":${partition.map(q).getOrElse("null")},""" +
           s""""type":${q(ctype)},"state":${q(state)},"worker":${q(worker)},""" +
           s""""start":$startMs,"end":${System.currentTimeMillis()}}"""
-        val p = new Path(cdir(dir),
-          f"$startMs%013d_${java.util.UUID.randomUUID().toString.take(8)}")
-        val out = f.create(p, false)
-        out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8)); out.close()
+        CopyOnWrite.publish(f, new Path(cdir(dir),
+          f"$startMs%013d_${java.util.UUID.randomUUID().toString.take(8)}"), body)
       } catch { case _: java.io.IOException => () }
     }
 
@@ -579,16 +560,12 @@ object CompactionHistory {
     import scala.jdk.CollectionConverters._
     val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val d = cdir(dir)
-    val Field = """"(\w+)":(?:"((?:[^"\\]|\\.)*)"|(\d+)|null)""".r
     // event files are named <zero-padded startMs>_<rand>: name order IS
-    // start order
+    // start order (hidden names are events still being published)
     val rows = if (!f.exists(d)) Nil
-    else f.listStatus(d).toSeq.sortBy(_.getPath.getName).map { st =>
-      val in = f.open(st.getPath)
-      val body = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      val kv = Field.findAllMatchIn(body).map(m =>
-        m.group(1) -> Option(m.group(2)).orElse(Option(m.group(3)))).toMap
+    else f.listStatus(d).toSeq.filterNot(_.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName).map { st =>
+      val kv = CopyOnWrite.jsonFields(CopyOnWrite.readSmall(f, st.getPath))
       Row(kv("table").orNull, kv.getOrElse("partition", None).orNull,
         kv("type").orNull, kv("state").orNull, kv("worker").orNull,
         kv("start").map(_.toLong).map(java.lang.Long.valueOf).orNull,

@@ -23,9 +23,10 @@ import org.apache.spark.sql.functions._
   *     _versions/v00000002/  ...parquet files... + _committed
   * }}}
   *
-  *  - A writer (serialized by [[CopyOnWrite]]'s sidecar lock protocol,
-  *    here on `basePath + ".ver_lock"`) writes version N+1's files into a
-  *    new directory, then creates the empty `_committed` marker LAST.
+  *  - A writer (serialized by the table lock every writer takes,
+  *    [[CopyOnWrite.withTableLock]] on `basePath`) writes version N+1's
+  *    files into a new directory, then creates the empty `_committed`
+  *    marker LAST.
   *    Marker creation is the one atomic commit point (single
   *    create-file op on HDFS/local alike — no rename of the data dir).
   *  - A reader resolves "current" = the highest version directory whose
@@ -60,13 +61,13 @@ object Versioned {
   private def versionPath(base: String, v: Int): Path =
     new Path(s"$base/$VersionsDir/v${("%0" + Pad + "d").format(v)}")
 
-  /** Committed version numbers, ascending (metadata listing only). */
   /** Whether `base` is a versioned table (has a version history dir) —
     * the warehouse-scan probe the auto-compactor uses; one metadata
     * existence check, no data read. */
   def isVersionedTable(spark: SparkSession, base: String): Boolean =
     fs(spark, base).exists(new Path(s"$base/$VersionsDir"))
 
+  /** Committed version numbers, ascending (metadata listing only). */
   def versions(spark: SparkSession, base: String): Seq[Int] = {
     val f = fs(spark, base)
     val dir = new Path(s"$base/$VersionsDir")
@@ -124,15 +125,11 @@ object Versioned {
     * (e.g. a replication bootstrap dump). */
   def commitFiles(spark: SparkSession, base: String, srcDir: Path): Int = {
     graft.security.AccessPolicies.check(spark, base, "INSERT")
-    withVersionLock(spark, base) {
-      val f = fs(spark, base)
-      val next = currentVersion(spark, base).getOrElse(0) + 1
-      val dir = versionPath(base, next)
-      f.delete(dir, true)
-      f.mkdirs(dir)
-      copyDataFiles(spark, srcDir, dir)
-      f.create(new Path(dir, Marker), false).close() // THE commit point
-      next
+    CopyOnWrite.withTableLock(spark, base) {
+      commitVersion(spark, base) { dir =>
+        fs(spark, base).mkdirs(dir)
+        copyDataFiles(spark, srcDir, dir)
+      }
     }
   }
 
@@ -154,20 +151,13 @@ object Versioned {
 
   /** Commit `df` as the next version and return its number. The data is
     * fully written before the marker lands, so readers never see a
-    * partial snapshot. Serialized against other writers by the same
-    * lock-file protocol as [[CopyOnWrite]] (create-no-overwrite sidecar,
-    * stale reclaim) so two writers cannot claim the same version. */
+    * partial snapshot. Serialized against every other writer of `base`
+    * by the table lock ([[CopyOnWrite.withTableLock]]: the sidecar lock,
+    * or the shared [[TxnManager]] queue when `graft.txn.dir` is set), so
+    * two writers cannot claim the same version. */
   def commit(spark: SparkSession, base: String, df: DataFrame): Int = {
     graft.security.AccessPolicies.check(spark, base, "INSERT")
-    withVersionLock(spark, base) {
-      val f = fs(spark, base)
-      val next = currentVersion(spark, base).getOrElse(0) + 1
-      val dir = versionPath(base, next)
-      f.delete(dir, true) // leftover from a crashed writer: overwrite
-      df.write.parquet(dir.toString)
-      f.create(new Path(dir, Marker), false).close() // THE commit point
-      next
-    }
+    CopyOnWrite.withTableLock(spark, base)(commitDf(spark, base, df))
   }
 
   /** UPDATE ... SET assignments WHERE cond as a new version (SQL
@@ -177,8 +167,8 @@ object Versioned {
   def update(spark: SparkSession, base: String,
              cond: Column, assignments: Map[String, Column]): Int = {
     graft.security.AccessPolicies.check(spark, base, "UPDATE")
-    withVersionLock(spark, base) {
-      commitUnlocked(spark, base,
+    CopyOnWrite.withTableLock(spark, base) {
+      commitDf(spark, base,
         CopyOnWrite.simultaneousUpdate(read(spark, base), cond, assignments))
     }
   }
@@ -186,8 +176,8 @@ object Versioned {
   /** DELETE FROM ... WHERE cond as a new version. */
   def delete(spark: SparkSession, base: String, cond: Column): Int = {
     graft.security.AccessPolicies.check(spark, base, "DELETE")
-    withVersionLock(spark, base) {
-      commitUnlocked(spark, base,
+    CopyOnWrite.withTableLock(spark, base) {
+      commitDf(spark, base,
         read(spark, base).filter(!coalesce(cond, lit(false))))
     }
   }
@@ -200,7 +190,7 @@ object Versioned {
     * Dropped history disappears as whole base+delta lineages, never
     * leaving an orphaned delta. Returns the removed version numbers. */
   def vacuum(spark: SparkSession, base: String, keep: Int = 1): Seq[Int] =
-    withVersionLock(spark, base) {
+    CopyOnWrite.withTableLock(spark, base) {
       require(keep >= 1, "must keep at least the current version")
       val f = fs(spark, base)
       val vs = versions(spark, base)
@@ -316,13 +306,7 @@ object Versioned {
     val f = fs(spark, base)
     versions(spark, base).flatMap { v =>
       val p = new Path(versionPath(base, v), TagFile)
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        val s = scala.io.Source.fromInputStream(in).mkString.trim
-        in.close()
-        Some(s -> v)
-      }
+      if (!f.exists(p)) None else Some(CopyOnWrite.readSmall(f, p).trim -> v)
     }.toMap
   }
 
@@ -354,53 +338,39 @@ object Versioned {
     graft.security.AccessPolicies.check(spark, base, "INSERT")
     graft.security.AccessPolicies.check(spark, base, "UPDATE")
     if (deletes.isDefined) graft.security.AccessPolicies.check(spark, base, "DELETE")
-    withVersionLock(spark, base) {
+    CopyOnWrite.withTableLock(spark, base) {
       require(keys.nonEmpty, "delta commit needs key columns")
-      // lazy: untagged commits (the common batch path) must not pay the
-      // O(versions) tag-file scan
-      tag.flatMap(t => committedTags(spark, base).get(t)) match {
-        case Some(v) => v // replayed batch: already applied, no-op
-        case None => commitDeltaUnlocked(spark, base, keys, upserts, deletes, tag)
+      // a replayed batch is already applied: its version, no write. Lazy:
+      // untagged commits (the common batch path) skip the tag-file scan
+      tag.flatMap(t => committedTags(spark, base).get(t)).getOrElse {
+        val cur = requireVersions(spark, base)
+        val curKeys = deltaKeysOf(spark, base)
+        require(curKeys.forall(_ == keys),
+          s"delta key mismatch: table uses ${curKeys.get}, got $keys")
+        val cols = spark.read.parquet(versionPath(base, cur.last).toString)
+          .columns.filterNot(_ == OpCol).toIndexedSeq
+        require(cols.forall(upserts.columns.contains),
+          s"upserts missing columns: ${cols.filterNot(upserts.columns.contains)}")
+        val up = upserts.select(cols.map(col): _*).withColumn(OpCol, lit("upsert"))
+        val del = deletes.map { d =>
+          require(keys.forall(d.columns.contains), "deletes must carry the key columns")
+          // null-pad non-key columns: only the key matters for a delete
+          d.select(keys.map(col) ++
+            cols.filterNot(keys.contains).map(c =>
+              lit(null).cast(up.schema(c).dataType).as(c)): _*)
+            .select(cols.map(col): _*).withColumn(OpCol, lit("delete"))
+        }
+        val delta = del.map(up.unionAll).getOrElse(up)
+        tag.foreach(t => require(!t.contains("\n"), "tag must be single-line"))
+        val f = fs(spark, base)
+        commitVersion(spark, base) { dir =>
+          delta.write.parquet(dir.toString)
+          CopyOnWrite.publish(f, new Path(dir, DeltaMarker), keys.mkString(","))
+          tag.foreach(t => CopyOnWrite.publish(f, new Path(dir, TagFile), t))
+        }
       }
     }
   }
-
-  private def commitDeltaUnlocked(spark: SparkSession, base: String, keys: Seq[String],
-                                  upserts: DataFrame, deletes: Option[DataFrame],
-                                  tag: Option[String]): Int = {
-      val cur = resolveUnlocked(spark, base)
-      val curKeys = deltaKeysOf(spark, base)
-      require(curKeys.forall(_ == keys),
-        s"delta key mismatch: table uses ${curKeys.get}, got $keys")
-      val cols = spark.read.parquet(versionPath(base, cur.last).toString)
-        .columns.filterNot(_ == OpCol).toIndexedSeq
-      require(cols.forall(upserts.columns.contains),
-        s"upserts missing columns: ${cols.filterNot(upserts.columns.contains)}")
-      val up = upserts.select(cols.map(col): _*).withColumn(OpCol, lit("upsert"))
-      val del = deletes.map { d =>
-        require(keys.forall(d.columns.contains), "deletes must carry the key columns")
-        // null-pad non-key columns: only the key matters for a delete
-        d.select(keys.map(col) ++
-          cols.filterNot(keys.contains).map(c =>
-            lit(null).cast(up.schema(c).dataType).as(c)): _*)
-          .select(cols.map(col): _*).withColumn(OpCol, lit("delete"))
-      }
-      val delta = del.map(up.unionAll).getOrElse(up)
-      val f = fs(spark, base)
-      val next = cur.last + 1
-      val dir = versionPath(base, next)
-      f.delete(dir, true)
-      delta.write.parquet(dir.toString)
-      val sidecar = f.create(new Path(dir, DeltaMarker), false)
-      sidecar.writeBytes(keys.mkString(",")); sidecar.close()
-      tag.foreach { t =>
-        require(!t.contains("\n"), "tag must be single-line")
-        val tf = f.create(new Path(dir, TagFile), false)
-        tf.writeBytes(t); tf.close()
-      }
-      f.create(new Path(dir, Marker), false).close() // THE commit point
-      next
-    }
 
   /** Snapshot read with merge-on-read: newest version wins per key across
     * the base full version and every later delta. One window over
@@ -440,14 +410,14 @@ object Versioned {
     * Worker.java): after this, [[readMerged]] is a plain scan again.
     * No-op (returns current version) when there is nothing to fold. */
   def compactDeltas(spark: SparkSession, base: String, keys: Seq[String]): Int =
-    withVersionLock(spark, base) {
+    CopyOnWrite.withTableLock(spark, base) {
       val f = fs(spark, base)
-      val vs = resolveUnlocked(spark, base)
+      val vs = requireVersions(spark, base)
       val hasDeltas = f.exists(new Path(versionPath(base, vs.last), DeltaMarker))
       if (!hasDeltas) vs.last
       else {
         val start = System.currentTimeMillis()
-        val v = commitUnlocked(spark, base, readMerged(spark, base, keys))
+        val v = commitDf(spark, base, readMerged(spark, base, keys))
         CompactionHistory.record(spark, new Path(base).getName, None,
           "MAJOR", "succeeded", start)
         v
@@ -505,11 +475,11 @@ object Versioned {
 
   private def headDeltaCount(spark: SparkSession, base: String): Int = {
     val f = fs(spark, base)
-    resolveUnlocked(spark, base).reverse
+    requireVersions(spark, base).reverse
       .takeWhile(v => f.exists(new Path(versionPath(base, v), DeltaMarker))).size
   }
 
-  private def resolveUnlocked(spark: SparkSession, base: String): Seq[Int] = {
+  private def requireVersions(spark: SparkSession, base: String): Seq[Int] = {
     val vs = versions(spark, base)
     require(vs.nonEmpty, s"no committed versions under $base/$VersionsDir")
     vs
@@ -520,33 +490,24 @@ object Versioned {
     versions(spark, base).reverse.iterator
       .map(v => new Path(versionPath(base, v), DeltaMarker))
       .find(f.exists)
-      .map { p =>
-        val in = f.open(p)
-        val s = scala.io.Source.fromInputStream(in).mkString.trim
-        in.close()
-        s.split(",").toSeq
-      }
+      .map(p => CopyOnWrite.readSmall(f, p).trim.split(",").toSeq)
   }
 
-  // commit() without re-acquiring the (non-reentrant) lock — for DML
-  // paths that must hold the lock across their read+transform+commit
-  private def commitUnlocked(spark: SparkSession, base: String, df: DataFrame): Int = {
+  /** The version-commit skeleton every writer shares; the caller holds
+    * the table lock and has made its own access checks. Claims the next
+    * id, clears a crashed writer's leftover dir, lets `write` fill it,
+    * then creates the empty `_committed` marker LAST — THE commit
+    * point. Returns the committed version. */
+  private def commitVersion(spark: SparkSession, base: String)(write: Path => Unit): Int = {
     val f = fs(spark, base)
     val next = currentVersion(spark, base).getOrElse(0) + 1
     val dir = versionPath(base, next)
     f.delete(dir, true)
-    df.write.parquet(dir.toString)
+    write(dir)
     f.create(new Path(dir, Marker), false).close()
     next
   }
 
-  /** Same protocol as CopyOnWrite's table lock, on a versioned-table
-    * sidecar. Writers serialize; readers never take it. */
-  private def withVersionLock[T](spark: SparkSession, base: String)(body: => T): T = {
-    val f = fs(spark, base)
-    f.mkdirs(new Path(s"$base/$VersionsDir"))
-    val lock = new Path(base + ".ver_lock")
-    CopyOnWrite.acquireLock(f, lock, "versioned-table")
-    try body finally f.delete(lock, false)
-  }
+  private def commitDf(spark: SparkSession, base: String, df: DataFrame): Int =
+    commitVersion(spark, base)(dir => df.write.parquet(dir.toString))
 }

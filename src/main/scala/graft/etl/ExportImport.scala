@@ -43,8 +43,7 @@ object ExportImport {
       .filter(st => !st.getPath.getName.startsWith("_"))
       .foreach(st => FileUtil.copy(srcFs, st.getPath, fs, new Path(dataDir, st.getPath.getName), false, conf))
 
-    val os = fs.create(new Path(out, MetadataFile))
-    try os.write(ddl.getBytes("UTF-8")) finally os.close()
+    graft.acid.CopyOnWrite.publish(fs, new Path(out, MetadataFile), ddl)
   }
 
   /** Replay an export at `dir` as `asTable` (optionally in another
@@ -55,9 +54,7 @@ object ExportImport {
     val fs = in.getFileSystem(conf)
     val metaPath = new Path(in, MetadataFile)
     require(fs.exists(metaPath), s"IMPORT source $dir has no $MetadataFile descriptor")
-    val is = fs.open(metaPath)
-    val ddl =
-      try scala.io.Source.fromInputStream(is, "UTF-8").mkString finally is.close()
+    val ddl = graft.acid.CopyOnWrite.readSmall(fs, metaPath)
 
     // SHOW CREATE TABLE emits `CREATE TABLE <qualified original name> (`;
     // replay it under the import name. Two rewrites matter:

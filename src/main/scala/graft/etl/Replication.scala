@@ -113,7 +113,7 @@ object Replication {
     }
 
     val info = DumpInfo("all", from, last, keys)
-    writeSmall(fs, new Path(out, MetaFile),
+    CopyOnWrite.publish(fs, new Path(out, MetaFile),
       s"repl.scope=${info.scope}\nrepl.event.id=${info.fromId}\n" +
         s"repl.last.id=${info.lastId}\nrepl.keys=${keys.mkString(",")}\n")
     info
@@ -122,7 +122,7 @@ object Replication {
   def readDumpInfo(spark: SparkSession, dumpDir: String): DumpInfo = {
     val p = new Path(dumpDir, MetaFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val kv = readSmall(fs, p).linesIterator.filter(_.contains("="))
+    val kv = CopyOnWrite.readSmall(fs, p).linesIterator.filter(_.contains("="))
       .map { l => val Array(k, v) = l.split("=", 2); (k, v) }.toMap
     DumpInfo(kv("repl.scope"), kv("repl.event.id").toInt, kv("repl.last.id").toInt,
       kv("repl.keys").split(",").filter(_.nonEmpty).toSeq)
@@ -135,7 +135,7 @@ object Replication {
   def lastReplicatedId(spark: SparkSession, destBase: String): Option[Int] = {
     val p = new Path(destBase, StateFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None else Some(readSmall(fs, p).trim.toInt)
+    if (!fs.exists(p)) None else Some(CopyOnWrite.readSmall(fs, p).trim.toInt)
   }
 
   /** Replay a dump into `destBase`. Returns the destination's state id
@@ -208,27 +208,10 @@ object Replication {
     load(spark, dumpDir, destBase)
   }
 
-  // ---- tiny-file helpers (state markers are metadata, never data) ------
-
+  // the state marker is metadata, never data: one atomic replace, so a
+  // crash or a concurrent sync never finds a replica without its state
   private def writeState(spark: SparkSession, destBase: String, id: Int): Unit = {
     val p = new Path(destBase, StateFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    writeSmall(fs, p, id.toString)
-  }
-
-  private def writeSmall(fs: org.apache.hadoop.fs.FileSystem, p: Path,
-                         body: String): Unit = {
-    // write-then-rename: readers of the marker never see a torn write
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val os = fs.create(tmp, true)
-    try os.write(body.getBytes("UTF-8")) finally os.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"cannot publish $p")
-  }
-
-  private def readSmall(fs: org.apache.hadoop.fs.FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    CopyOnWrite.publish(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, id.toString)
   }
 }

@@ -69,14 +69,16 @@ object IncrementalMv {
       .agg(aggs.head.merge, aggs.tail.map(_.merge): _*)
 
   private def writeSnapshot(spark: SparkSession, path: String, baseDir: String,
-                            cells: DataFrame): Unit = {
+                            cells: DataFrame): Unit =
+      graft.acid.CopyOnWrite.withTableLock(spark, dataDir(path)) {
     import spark.implicits._
-    // Distributed staged write + atomic swap (the CopyOnWrite protocol):
-    // the merged cells may read the CURRENT data dir, so they are written
-    // to a sibling staging dir first (old dir still intact while the plan
-    // executes) and promoted by two renames. Nothing is ever collected on
-    // the driver — a view grouped on a high-cardinality key stays
-    // executor-resident no matter how wide it gets.
+    // Distributed staged write + atomic swap (the CopyOnWrite protocol,
+    // under the data dir's writer lock): the merged cells may read the
+    // CURRENT data dir, so they are written to a sibling staging dir
+    // first (old dir still intact while the plan executes) and promoted
+    // by two renames. Nothing is ever collected on the driver — a view
+    // grouped on a high-cardinality key stays executor-resident no
+    // matter how wide it gets.
     val data = dataDir(path)
     val fs = new org.apache.hadoop.fs.Path(data)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

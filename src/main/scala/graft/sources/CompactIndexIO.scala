@@ -82,27 +82,29 @@ object CompactIndexIO {
     files.toSeq.sorted.toDF("src_file").write.mode("overwrite").parquet(dir)
   }
 
+  /** Write the whole index dir (rows + snapshot [+ params]) atomically
+    * under the index's writer lock: direct on the first build,
+    * staged-swap rebuild afterwards — the same hardening refresh() has.
+    * A plain overwrite deletes the live index first, so a concurrently
+    * routed query would see a missing or half-written index and silently
+    * return empty prunes. */
+  private def writeIndexDir(spark: SparkSession, indexDir: String)
+                           (write: String => Unit): Unit =
+    graft.acid.CopyOnWrite.withTableLock(spark, indexDir) {
+      val p = new org.apache.hadoop.fs.Path(indexDir)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(p)) write(indexDir)
+      else {
+        graft.acid.CopyOnWrite.stagedSwap(spark, indexDir) { st =>
+          write(st.toString); true
+        }
+        ()
+      }
+    }
+
   /** One shuffle of (key, file): the distinct is the map-side-combinable
     * aggregate; file paths are stored relative-free (full URI) so the
     * index survives being read from a different working directory. */
-  /** Write the whole index dir (rows + snapshot [+ params]) atomically:
-    * direct on the first build, staged-swap rebuild afterwards — the
-    * same hardening refresh() has. A plain overwrite deletes the live
-    * index first, so a concurrently routed query would see a missing or
-    * half-written index and silently return empty prunes. */
-  private def writeIndexDir(spark: SparkSession, indexDir: String)
-                           (write: String => Unit): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) write(indexDir)
-    else {
-      graft.acid.CopyOnWrite.stagedSwap(spark, indexDir) { st =>
-        write(st.toString); true
-      }
-      ()
-    }
-  }
-
   def build(spark: SparkSession, tableDir: String, column: String, indexDir: String): Unit = {
     val src = spark.read.parquet(tableDir)
     writeIndexDir(spark, indexDir) { dir =>

@@ -144,12 +144,16 @@ object KvStore {
     * Goes through the same staged swap as a full rewrite, so concurrent
     * readers see the old or the new layout, never a mix, and the same
     * governance chokepoints fire (a compaction rewrites everything:
-    * INSERT + DELETE, the INSERT OVERWRITE mapping). */
-  def compact(spark: SparkSession, dir: String, numSegments: Int): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val meta = readMeta(fs, dir)
-    write(spark, spark.read.format("graftkv").load(dir), dir, meta.keyCol, numSegments)
-  }
+    * INSERT + DELETE, the INSERT OVERWRITE mapping). The store is read
+    * INSIDE the writer lock: the scan captures the segment list when it
+    * is loaded, so a read taken before the lock would drop every append
+    * that committed while this compaction waited. */
+  def compact(spark: SparkSession, dir: String, numSegments: Int): Unit =
+    graft.acid.CopyOnWrite.withTableLock(spark, dir) {
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val meta = readMeta(fs, dir)
+      write(spark, spark.read.format("graftkv").load(dir), dir, meta.keyCol, numSegments)
+    }
 
   /** INSERT INTO an existing store (the HiveHBaseTableOutputFormat
     * direction — the handler's write half): new rows land as ADDITIONAL
@@ -291,31 +295,20 @@ object KvStore {
     // commits them — together with any pre-existing lines — via writeMeta)
     val segLines = fs.listStatus(new Path(dirStr, SegMetaDir)).toSeq
       .filter(_.getPath.getName.endsWith(".meta"))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        val line = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        in.close(); line
-      }.sorted
+      .map(st => graft.acid.CopyOnWrite.readSmall(fs, st.getPath).trim).sorted
     fs.delete(new Path(dirStr, SegMetaDir), true)
     segLines
   }
 
-  /** Single-file meta rewrite — the store's commit point. Staged to a
-    * temp name and renamed with OVERWRITE so a crash mid-write can never
-    * leave a truncated meta over a previously committed one (an
-    * in-place create(overwrite) truncates FIRST — a died append would
-    * otherwise destroy every committed row's visibility). */
+  /** Single-file meta rewrite — the store's commit point. Published
+    * atomically so a crash mid-write can never leave a truncated meta
+    * over a previously committed one (an in-place create(overwrite)
+    * truncates FIRST — a died append would otherwise destroy every
+    * committed row's visibility). */
   private def writeMeta(fs: FileSystem, dirStr: String, keyCol: String,
-                        ddl: String, segLines: Seq[String]): Unit = {
-    val tmp = new Path(dirStr, MetaFile + ".tmp")
-    val out = fs.create(tmp, true)
-    out.write((s"$Magic\nkey\t$keyCol\nschema\t$ddl\n" +
-      segLines.map("seg\t" + _).mkString("\n") + "\n").getBytes(UTF_8))
-    out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(tmp.toUri, fs.getConf)
-      .rename(tmp, new Path(dirStr, MetaFile),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+                        ddl: String, segLines: Seq[String]): Unit =
+    graft.acid.CopyOnWrite.publish(fs, new Path(dirStr, MetaFile),
+      s"$Magic\nkey\t$keyCol\nschema\t$ddl\n" + segLines.map("seg\t" + _).mkString("\n") + "\n")
 
   private def keyOf(r: InternalRow, idx: Int, dt: DataType): Any = dt match {
     case LongType => r.getLong(idx)
@@ -359,9 +352,7 @@ object KvStore {
   def readMeta(fs: FileSystem, dir: String): Meta = {
     val p = new Path(dir, MetaFile)
     require(fs.exists(p), s"not a graftkv store (no $MetaFile): $dir")
-    val in = fs.open(p)
-    val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    in.close()
+    val lines = graft.acid.CopyOnWrite.readSmall(fs, p).linesIterator.toList
     require(lines.headOption.contains(Magic), s"bad magic in $p")
     var key: String = null
     var schema: StructType = null

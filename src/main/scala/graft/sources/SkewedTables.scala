@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
+import graft.acid.CopyOnWrite.{jsonStr, jsonUnescape, publish, readSmall}
+
 /** Skewed tables / list bucketing — `CREATE TABLE ... SKEWED BY (c1, c2)
   * ON (('v1','v2'), ...) STORED AS DIRECTORIES` (reference: ql/src/java/
   * org/apache/hadoop/hive/ql/parse/HiveParser.g tableSkewed,
@@ -144,30 +146,23 @@ object SkewedTables {
     spark.read.parquet(dir).drop(DirCol)
   }
 
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
   private def writeSidecar(spark: SparkSession, dir: String, meta: SkewMeta): Unit = {
     val path = new org.apache.hadoop.fs.Path(dir, sidecarName)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(
-      (s"""{"columns":[${meta.columns.map(jstr).mkString(",")}],""" +
-       s""""dirs":[${meta.hotDirs.toSeq.sorted.map(jstr).mkString(",")}]}""").getBytes("UTF-8"))
-    finally out.close()
+    publish(path.getFileSystem(spark.sparkContext.hadoopConfiguration), path,
+      s"""{"columns":[${meta.columns.map(jsonStr).mkString(",")}],""" +
+        s""""dirs":[${meta.hotDirs.toSeq.sorted.map(jsonStr).mkString(",")}]}""")
   }
 
   private[sources] def readSidecar(spark: SparkSession, dir: String): Option[SkewMeta] = {
     val path = new org.apache.hadoop.fs.Path(dir, sidecarName)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) return None
-    val in = fs.open(path)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    val text = readSmall(fs, path)
     // sidecar is engine-written; parse with the same minimal shape
     val itemRe = """"((?:[^"\\]|\\.)*)"""".r
     def arr(key: String): Option[Seq[String]] =
       (key + """\s*:\s*\[([^\]]*)\]""").r.findFirstMatchIn(text)
-        .map(m => itemRe.findAllMatchIn(m.group(1)).map(x => unescape(x.group(1))).toSeq)
+        .map(m => itemRe.findAllMatchIn(m.group(1)).map(x => jsonUnescape(x.group(1))).toSeq)
     val current = for {
       cols <- arr("\"columns\"")
       dirs <- arr("\"dirs\"")
@@ -175,14 +170,11 @@ object SkewedTables {
     // legacy single-column shape ({"column":c,"values":[...]}) from
     // earlier sidecars: values were written UNencoded
     lazy val legacy = for {
-      c <- """"column"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(text).map(m => unescape(m.group(1)))
+      c <- """"column"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(text).map(m => jsonUnescape(m.group(1)))
       vs <- arr("\"values\"")
     } yield SkewMeta(Seq(c), vs.map(v => encodeDir(Seq(v))).toSet)
     current.orElse(legacy)
   }
-
-  private def unescape(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
 }
 
 /** Registered skewed-table layouts, keyed by normalized directory — the

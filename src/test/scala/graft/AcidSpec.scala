@@ -220,4 +220,53 @@ class AcidSpec extends AnyFunSuite {
       spark.sparkContext.hadoopConfiguration)
     CopyOnWrite.assertLockCapable(local) // must not throw
   }
+
+  test("the writer lock is reentrant per thread and still excludes other threads") {
+    import scala.concurrent.{Await, Future, TimeoutException}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val path = freshTable()
+    val lock = new java.io.File(path + ".cow_lock")
+    val other = CopyOnWrite.withTableLock(spark, path) {
+      // a nested call on the same table runs its body at once
+      assert(CopyOnWrite.withTableLock(spark, path)(42) == 42)
+      assert(lock.exists, "the inner release must not drop the outer hold")
+      val other = Future(CopyOnWrite.withTableLock(spark, path)(7))
+      intercept[TimeoutException] { Await.result(other, 2.seconds) }
+      assert(CopyOnWrite.delete(spark, path, lit(false)) == 0L) // locked writer re-enters
+      other
+    }
+    assert(Await.result(other, 1.minute) == 7) // the outer release lets it in
+    assert(!lock.exists)
+  }
+
+  test("publish replaces a small file atomically: a polling reader never sees it absent or partial") {
+    val dir = Files.createTempDirectory("graft_publish")
+    val p = new org.apache.hadoop.fs.Path(dir.toString, "_state")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def body(i: Int) = s"$i:" + ("x" * 4096) + s":$i"
+    CopyOnWrite.publish(fs, p, body(0))
+    @volatile var done = false
+    var bad = 0 // written by the reader only, read after join()
+    var firstBad = ""
+    val polling = new java.util.concurrent.CountDownLatch(1)
+    val reader = new Thread(() => while (!done) {
+      val got = try CopyOnWrite.readSmall(fs, p)
+                catch { case e: java.io.IOException => s"absent: $e" }
+      val ok = got.split(":", -1) match {
+        case Array(a, x, b) => a == b && x == "x" * 4096
+        case _ => false
+      }
+      if (!ok) { if (bad == 0) firstBad = got.take(120); bad += 1 }
+      polling.countDown()
+    })
+    reader.start()
+    polling.await()
+    (1 to 200).foreach(i => CopyOnWrite.publish(fs, p, body(i)))
+    done = true
+    reader.join()
+    assert(bad == 0, s"reader saw a missing or partial file $bad times, first: $firstBad")
+    assert(CopyOnWrite.readSmall(fs, p) == body(200))
+    assert(dir.toFile.list().toSeq == Seq("_state"), "a temp sibling was left behind")
+  }
 }

@@ -109,4 +109,38 @@ class CompactorSpec extends AnyFunSuite {
     // after close the seat frees up
     Compactor.start(spark, w, intervalMs = 60000).close()
   }
+
+  test("the daemon seat is atomic: of eight racing starts exactly one wins") {
+    val w = warehouse("seat_race")
+    new java.io.File(w).mkdirs()
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val tries = (1 to 8).map(_ => pool.submit(() => {
+        go.await()
+        scala.util.Try(Compactor.start(spark, w, intervalMs = 60000))
+      }))
+      go.countDown()
+      val results = tries.map(_.get())
+      val handles = results.flatMap(_.toOption)
+      try {
+        assert(handles.size == 1, s"${handles.size} daemons took one warehouse's seat")
+        results.flatMap(_.failed.toOption).foreach(e => assert(e.isInstanceOf[IllegalStateException], e))
+      } finally handles.foreach(_.close())
+    } finally pool.shutdown()
+  }
+
+  test("a dead daemon's stale seat is reclaimed; a fresh one still refuses") {
+    val w = warehouse("seat_stale")
+    new java.io.File(w).mkdirs()
+    val seat = new java.io.File(s"$w/_compactor_daemon")
+    assert(seat.createNewFile())
+    // older than 10 intervals: its daemon is gone
+    assert(seat.setLastModified(System.currentTimeMillis() - 10 * 60000L - 60000L))
+    Compactor.start(spark, w, intervalMs = 60000).close()
+    assert(!seat.exists, "the reclaimed seat was not released on close")
+    assert(seat.createNewFile()) // a live daemon's fresh seat
+    try intercept[IllegalStateException](Compactor.start(spark, w, intervalMs = 60000))
+    finally assert(seat.delete())
+  }
 }

@@ -133,6 +133,16 @@ class ExplainSpec extends AnyFunSuite {
       assert(hist.forall(_.getAs[String]("state") == "succeeded"))
       assert(hist.forall(_.getAs[String]("tbl") == "t"))
       assert(hist.forall(r => r.getAs[Long]("end_ms") >= r.getAs[Long]("start_ms")))
+
+      // quotes, backslashes and line breaks in a table name or a failure
+      // message read back verbatim
+      val odd = "we\"ird\\x"
+      val why = "failed: no \"v\" in C:\\tmp\nsecond line"
+      CompactionHistory.record(spark, odd, Some("ds=\"1\""), "MAJOR", why, System.currentTimeMillis())
+      val back = TxnDdl.run(spark, "SHOW COMPACTIONS").collect()
+        .filter(_.getAs[String]("tbl") != "t")
+      assert(back.map(r => (r.getAs[String]("tbl"), r.getAs[String]("part"),
+        r.getAs[String]("state"))).toSeq == Seq((odd, "ds=\"1\"", why)))
     } finally spark.conf.unset("graft.txn.dir")
   }
 

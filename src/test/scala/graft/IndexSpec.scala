@@ -279,4 +279,27 @@ class IndexSpec extends AnyFunSuite {
     CompactIndexIO.build(spark, path, "o_orderpriority", idx)
     assert(!CompactIndexIO.isStale(spark, path, idx))
   }
+
+  test("a rebuild over an existing index waits for a live writer lock before it swaps") {
+    import scala.concurrent.{Await, Future, TimeoutException}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val path = s"$base/orders_locked"
+    val idx = s"$base/orders_locked_idx"
+    Tables.orders(spark, sf).limit(100)
+      .write.mode(SaveMode.Overwrite).parquet(path)
+    CompactIndexIO.build(spark, path, "o_orderpriority", idx)
+    Tables.orders(spark, sf).limit(10)
+      .write.mode(SaveMode.Append).parquet(path)
+    assert(CompactIndexIO.isStale(spark, path, idx))
+    val lock = new java.io.File(new org.apache.hadoop.fs.Path(idx).toUri.getPath + ".cow_lock")
+    assert(lock.createNewFile(), "could not plant the competing lock")
+    val f = Future(CompactIndexIO.build(spark, path, "o_orderpriority", idx))
+    try {
+      intercept[TimeoutException] { Await.result(f, 3.seconds) }
+      assert(CompactIndexIO.isStale(spark, path, idx), "the rebuild swapped under a live lock")
+    } finally assert(lock.delete())
+    Await.result(f, 5.minutes)
+    assert(!CompactIndexIO.isStale(spark, path, idx))
+  }
 }

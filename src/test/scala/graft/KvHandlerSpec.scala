@@ -225,6 +225,31 @@ class KvHandlerSpec extends AnyFunSuite {
     assert(scanOf(after.filter(col("k") === 3050L)).inputRDD.getNumPartitions == 1)
   }
 
+  test("compaction reads the store inside the writer lock: an append that lands while it waits survives") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val dir = "target/storage/kv_spec/compact_race"
+    KvStore.write(spark, (1L to 50L).map(i => (i, s"v$i")).toDF("k", "v"),
+      dir, "k", numSegments = 2)
+    val fc = graft.acid.CopyOnWrite.withTableLock(spark, dir) {
+      val f = Future(KvStore.compact(spark, dir, numSegments = 2))
+      Thread.sleep(1000)
+      assert(!f.isCompleted, "compaction ran while another writer held the lock")
+      // a writer that holds the lock appends (a reentrant call) and commits
+      KvStore.append(spark, (51L to 60L).map(i => (i, s"a$i")).toDF("k", "v"),
+        dir, numSegments = 1)
+      f
+    }
+    Await.result(fc, 2.minutes)
+    val got = spark.read.format("graftkv").load(dir)
+    assert(got.count() == 60, "the compaction dropped rows appended while it waited")
+    assert(got.filter(col("k") > 50L).count() == 10)
+    assert(KvStore.readMeta(new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), dir).segments.length == 2)
+  }
+
   test("seek-to-lo: a point lookup at a segment's tail materializes ~1 row") {
     import spark.implicits._
     val dir = "target/storage/kv_spec/seek"

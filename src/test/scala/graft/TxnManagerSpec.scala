@@ -253,6 +253,25 @@ class TxnManagerSpec extends AnyFunSuite {
       holder.unlock(h2.extLockId)
       assert(Await.result(fl, 60.seconds) == 1)
       assert(Versioned.read(spark, dst).count() == 1)
+
+      // --- every Versioned writer queues too, and none makes a sidecar lock
+      val t3 = s"$base/serial_ver"
+      Versioned.commit(spark, t3, Seq((1L, "a")).toDF("k", "v"))
+      def holdThenCommit(write: => Int): Unit = {
+        val before = Versioned.versions(spark, t3).size
+        val h = holder.acquireLocks(Seq(tbl(Exclusive, "serial_ver")))
+        val fw = Future(write)
+        Thread.sleep(1500)
+        assert(!fw.isCompleted, "a Versioned writer ran while another manager held the X lock")
+        assert(Versioned.versions(spark, t3).size == before)
+        holder.unlock(h.extLockId)
+        Await.result(fw, 60.seconds)
+        assert(Versioned.versions(spark, t3).size == before + 1)
+      }
+      holdThenCommit(Versioned.commitDelta(spark, t3, Seq("k"), Seq((2L, "b")).toDF("k", "v")))
+      holdThenCommit(Versioned.commit(spark, t3, Seq((3L, "c")).toDF("k", "v")))
+      assert(Versioned.read(spark, t3).count() == 1)
+      assert(!new java.io.File(s"$t3.ver_lock").exists)
     } finally spark.conf.unset("graft.txn.dir")
   }
 
